@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-inspection tool: prints the formatted physical plan for the
   * named queries (or a default set of scan/join-shaped ones). Used to
   * keep the plans honest — pushed filters, pruned schemas, broadcast
@@ -15,15 +13,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q02_revenue_filter", "q04_revenue_by_nation",
         "q06_top_order_per_cust", "q25_events_hourly", "q30_cosine_topk")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     names.foreach { n =>
       println(s"\n========== $n ==========")

@@ -76,9 +76,10 @@ object Tables {
           !s.conf.getOption("spark.sql.legacy.parquet.nanosAsLong").contains("true")
         if (named || shimOff)
           throw new IllegalArgumentException(
-            "events.parquet read failed — if it stores TIMESTAMP(NANOS), set " +
-              ".config(\"spark.sql.legacy.parquet.nanosAsLong\", \"true\") on the " +
-              "SparkSession builder (Tables does not mutate session config)", e)
+            "events.parquet read failed — if it stores TIMESTAMP(NANOS), build " +
+              "the session with graft.GraftSession, which sets " +
+              "spark.sql.legacy.parquet.nanosAsLong=true (Tables does not mutate " +
+              "session config)", e)
         else throw e
     }
 

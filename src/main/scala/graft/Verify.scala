@@ -1,30 +1,11 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      // Reference semantics are coerce-to-null (pandas errors='coerce');
-      // Spark 4 defaults ANSI on, which would throw instead.
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      // CBO on (VERDICT r7 #6): inert for the path-read registered
-      // queries (no catalog stats to consume) but it makes the gate
-      // prove the whole catalog stays green under the estimator the
-      // ad-hoc/stats path (graft.ops.Statistics) relies on.
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession()
     new java.io.File(outDir).mkdirs()
     // Local-iteration filter: comma-separated query names. The driver
     // never sets it, so the recorded gate always runs the full catalog.
@@ -59,7 +40,10 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
-    val json = SparkEntry.oracleSql
+    // With SPARK_GRAFT_ONLY set, only the selected twins are listed, so
+    // tools/compare.py gates just those; a full run lists every twin.
+    val json = SparkEntry.oracleSql.iterator
+      .filter { case (k, _) => only.forall(_(k)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

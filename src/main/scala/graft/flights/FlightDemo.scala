@@ -1,7 +1,6 @@
 package graft.flights
 
 import graft.queries.Kpi
-import org.apache.spark.sql.SparkSession
 
 /** End-to-end demo driver: one DAG run (ingest -> transform ->
   * validate) over a CSV, then the K-1..K-5 KPI surface — the flow a
@@ -14,14 +13,7 @@ object FlightDemo {
     val csv = args.headOption.getOrElse("src/test/resources/flights_clean.csv")
     val root = if (args.length > 1) args(1)
       else java.nio.file.Files.createTempDirectory("flight_wh").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val pipeline = new FlightPipeline(spark, root)
     val counts = pipeline.run(csv)

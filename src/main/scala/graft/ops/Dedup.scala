@@ -276,8 +276,8 @@ object Dedup {
     *
     * Emitted SORTED ASCENDING (r9): the [[jaccardOfSorted]] merge
     * kernel's contract, paid once per document instead of a hash set
-    * per candidate PAIR (ProbeInterCount: 10x on pair-heavy
-    * verification, value-identical). Every other consumer is
+    * per candidate PAIR (measured 10x on pair-heavy verification,
+    * value-identical). Every other consumer is
     * order-invariant by construction — [[minhashSignature]] is an
     * array_min fold, band keys derive from the signature, and the
     * decontamination grams explode — so sorting changes no output
@@ -461,7 +461,7 @@ object Dedup {
     * array. The HOF form re-walks the token array once per bit —
     * each walk paying per-element lambda dispatch — which profiled at
     * 1.33 s vs 0.60 s for this formulation on the sf0.1 corpus
-    * (ProbeSimhashAlt; outputs bit-identical). Here the exploded
+    * (outputs bit-identical). Here the exploded
     * token rows of a document are contiguous in their map partition,
     * so partial aggregation collapses them to a single 64-column row
     * BEFORE the shuffle — the exchange carries one ~0.5 KB row per
@@ -721,10 +721,10 @@ object Dedup {
     * elements — [[shinglesFromTokenHashes]]'s emission contract.
     * Counts equal the hash-set spelling exactly (SetOpsSpec), so
     * swapping it under an oracle-checked tier changes no output;
-    * ProbeInterCount prices the difference at 10x on pair-heavy
-    * verification stages. The kernel appears twice (numerator and
-    * union arithmetic); whole-stage codegen's subexpression
-    * elimination evaluates it once per pair. */
+    * the difference measured 10x on pair-heavy verification stages.
+    * The kernel appears twice (numerator and union arithmetic);
+    * whole-stage codegen's subexpression elimination evaluates it
+    * once per pair. */
   private[ops] def jaccardOfSorted(a: Column, b: Column): Column = {
     val i = graft.functions.SetOps.sorted_inter_count(a, b)
     i.cast(DoubleType) / (size(a) + size(b) - i)
@@ -954,7 +954,7 @@ object Dedup {
     val b = idx.select(col("fp"), col("doc_id").as("doc_b"),
       col("px").as("px_b"), col("plen").as("len_b"))
     // Two DP-cost fixes, found by the sf1 probe (165 s -> ~20 s,
-    // output-identical; ProbeLev isolates the numbers):
+    // output-identical):
     //
     // 1. ONE DP evaluation per pair. The lazy spelling — distance in
     //    a Project, then a Filter on it, then a similarity Projection

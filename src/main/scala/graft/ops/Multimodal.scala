@@ -370,8 +370,8 @@ object Multimodal {
     * uniformly, so the above/below-median pattern survives shifts
     * that flip aHash bits (MultimodalSpec pins a gamma copy the aHash
     * radius-6 band loses and this tier keeps). The honest caveat,
-    * measured in ProbeDct: the stability argument needs BROADBAND
-    * low-frequency content (photographs, textures) — on a
+    * measured on synthetic rasters: the stability argument needs
+    * BROADBAND low-frequency content (photographs, textures) — on a
     * sparse-spectrum synthetic most of the 8x8 block is near-zero and
     * those bits wobble a few positions under any re-encode, which is
     * why q38f runs NEXT TO q38c as a second tier, not instead of it.

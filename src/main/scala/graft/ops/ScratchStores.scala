@@ -149,10 +149,20 @@ private[ops] object ScratchStores {
     * build no longer blocks unrelated stores (or the driver-pool
     * futures of q223/q31g consulting a different key); concurrent
     * callers of the SAME key still see exactly one build. A failed
-    * build is evicted so a retry can rebuild (the prior behavior). */
+    * build is evicted so a retry can rebuild (the prior behavior).
+    *
+    * A build that consults its own (kind, key) on the building thread
+    * would wait on its own latch forever; it throws
+    * IllegalStateException instead. A build must not wait on its own
+    * key from ANOTHER thread either (e.g. by joining a driver-pool
+    * future that calls pathFor for it): that still deadlocks, and no
+    * guard can see it. */
   def pathFor(key: String, tmpPrefix: String)(build: String => Unit): String = {
     reaper
     val k = s"$tmpPrefix#$key"
+    if (building.get.contains(k))
+      throw new IllegalStateException(
+        s"ScratchStores.pathFor re-entered for $k while building it on this thread")
     val fresh = new java.util.concurrent.CompletableFuture[String]()
     val prior = roots.putIfAbsent(k, fresh)
     if (prior != null)
@@ -160,6 +170,7 @@ private[ops] object ScratchStores {
       catch { case e: java.util.concurrent.CompletionException =>
         throw e.getCause }
     else {
+      building.get.add(k)
       try {
         val p = java.nio.file.Files
           .createTempDirectory(tmpPrefix).toString + "/store"
@@ -170,7 +181,11 @@ private[ops] object ScratchStores {
         roots.remove(k, fresh)
         fresh.completeExceptionally(t)
         throw t
-      }
+      } finally building.get.remove(k)
     }
   }
+
+  /** The (kind, key) pairs the current thread is building. */
+  private val building =
+    ThreadLocal.withInitial(() => new java.util.HashSet[String]())
 }

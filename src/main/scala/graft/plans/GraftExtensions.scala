@@ -14,11 +14,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   * over already-standardized staging — collapse to one. This removes
   * a full per-row string rewrite from the hot path.
   *
-  * Registered via the standard mechanism:
-  * {{{
-  * SparkSession.builder().withExtensions(new GraftExtensions) ...
-  * // or: --conf spark.sql.extensions=graft.plans.GraftExtensions
-  * }}}
+  * Registered by [[graft.GraftSession]], which every entry point uses;
+  * a session built elsewhere sets
+  * `--conf spark.sql.extensions=graft.plans.GraftExtensions`.
   */
 object CollapseTitleCase extends Rule[LogicalPlan] {
   override def apply(plan: LogicalPlan): LogicalPlan =

@@ -766,8 +766,8 @@ object Stats {
     * through DECIMAL(38,0) cross terms — n·Σx² and (Σx)² reach ~10²⁷
     * at SF100, far past int64 — with one integer division at the end
     * whose quotient is bounded by the value range (≤ 4·10¹², so the
-    * long-typed `div` result cannot wrap; ProbeDecimalDiv pins that
-    * both engines truncate toward zero).
+    * long-typed `div` result cannot wrap; both engines truncate
+    * toward zero).
     *
     * Scale shape: posexplode fans each vector into |dim| skinny rows
     * that partial-aggregate map-side onto |dim| groups before the

@@ -4,7 +4,6 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.flights.StarWarehouse
 import graft.queries.Kpi
-import org.apache.spark.sql.SparkSession
 
 /** The full streaming pipeline, end to end: CSV files land in a
   * directory -> StreamingIngest stages them (checkpointed, hash-
@@ -20,14 +19,7 @@ object StreamingPipelineDemo {
     val csv = args.headOption.getOrElse("src/test/resources/flights_clean.csv")
     val root = if (args.length > 1) args(1)
       else Files.createTempDirectory("stream_wh").toString
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")}]")
-      .config("spark.sql.shuffle.partitions", sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     val in = s"$root/incoming"
     Files.createDirectories(Paths.get(in))

@@ -5,8 +5,8 @@ import java.nio.file.Files
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** One shared session per suite; ANSI off to match the reference's
-  * coerce-to-null semantics (see Verify.scala). */
+/** One shared session per suite, built by [[GraftSession]] so the tests
+  * run under the config that ships; 4 cores whatever the host. */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = SparkTestBase.session
   def resource(name: String): String = s"src/test/resources/$name"
@@ -15,20 +15,6 @@ trait SparkTestBase extends AnyFunSuite {
 }
 
 object SparkTestBase {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.warehouse.dir",
-        Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = GraftSession(cores = 4,
+    warehouseDir = Some(Files.createTempDirectory("graft-wh").toString))
 }

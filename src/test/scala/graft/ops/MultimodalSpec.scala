@@ -1,5 +1,7 @@
 package graft.ops
 
+import java.awt.image.BufferedImage
+
 import graft.SparkTestBase
 
 class MultimodalSpec extends SparkTestBase {
@@ -155,13 +157,13 @@ class MultimodalSpec extends SparkTestBase {
   }
 
   test("DCT pHash tier: gamma-shifted copies caught at Hamming <= 3") {
-    import graft.tools.ProbeDct.{gammaShift, texture}
+    import MultimodalSpec.{gammaShift, texture}
     import Multimodal.{Codecs, dctHash}
     def decode(b: Array[Byte]) =
       javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(b))
     // broadband low-frequency texture — the photograph-like case where
-    // every coefficient the DCT reads is significant (ProbeDct measured
-    // the gamma Hammings at 2 here; sparse-spectrum synthetics like a
+    // every coefficient the DCT reads is significant (the gamma
+    // Hammings measure 2 here; sparse-spectrum synthetics like a
     // linear gradient legitimately sit higher, at 4-6)
     val tex = texture(42L)
     val baseHash = dctHash(decode(Codecs.encodeImage(tex, "png")))
@@ -182,11 +184,11 @@ class MultimodalSpec extends SparkTestBase {
 
   test("DCT tier catches a gamma copy the aHash tier's radius-6 band misses") {
     import spark.implicits._
-    import graft.tools.ProbeDct.{gammaShift, texture, tightTexture}
+    import MultimodalSpec.{gammaShift, texture, tightTexture}
     import Multimodal.{Codecs, MediaRow}
     // the differential that justifies the second tier: a tight-contrast
     // broadband texture (every aHash cell near the global mean) under a
-    // gamma-0.7 copy moves aHash PAST the radius-6 band (ProbeDct: 7
+    // gamma-0.7 copy moves aHash PAST the radius-6 band (measured: 7
     // bits) while the DCT hash stays within the 4-chunk pigeonhole
     // guarantee (2 bits) — aHash's mean threshold slides through the
     // dense luminance cluster, the DCT's median spectrum barely moves
@@ -377,4 +379,48 @@ class MultimodalSpec extends SparkTestBase {
     assert(report.forall(_.getAs[Long]("n_pairs") >= 0))
     assert(report.head.getAs[Long]("n_distinct_hashes") <= nAssets)
   }
+}
+
+/** Image fixtures for the DCT-tier cases: a gamma map and broadband
+  * textures whose low frequencies fill the 8x8 block the DCT hash reads. */
+object MultimodalSpec {
+  def gammaShift(src: BufferedImage, gamma: Double): BufferedImage = {
+    val out = new BufferedImage(src.getWidth, src.getHeight, BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until src.getHeight; x <- 0 until src.getWidth) {
+      val rgb = src.getRGB(x, y)
+      def m(v: Int) = math.min(255, math.round(255.0 * math.pow(v / 255.0, gamma))).toInt
+      out.setRGB(x, y, (m((rgb >> 16) & 0xFF) << 16) | (m((rgb >> 8) & 0xFF) << 8) | m(rgb & 0xFF))
+    }
+    out
+  }
+
+  /** Seeded random 8x8 luminance grid bilinearly upsampled to 40x30:
+    * broadband in exactly the 8x8 low frequencies the DCT hash reads. */
+  private def gridTexture(seed: Long, cell: scala.util.Random => Int): BufferedImage = {
+    val rnd = new scala.util.Random(seed)
+    val grid = Array.fill(8, 8)(cell(rnd))
+    val img = new BufferedImage(40, 30, BufferedImage.TYPE_INT_RGB)
+    for (y <- 0 until 30; x <- 0 until 40) {
+      val gx = x * 7.0 / 39
+      val gy = y * 7.0 / 29
+      val (x0, y0) = (gx.toInt, gy.toInt)
+      val (x1, y1) = (math.min(7, x0 + 1), math.min(7, y0 + 1))
+      val (fx, fy) = (gx - x0, gy - y0)
+      val v = math.round(grid(y0)(x0) * (1 - fy) * (1 - fx) + grid(y0)(x1) * (1 - fy) * fx +
+        grid(y1)(x0) * fy * (1 - fx) + grid(y1)(x1) * fy * fx).toInt
+      img.setRGB(x, y, (v << 16) | (v << 8) | v)
+    }
+    img
+  }
+
+  /** Broadband full-contrast texture — the photograph-like case. */
+  def texture(seed: Long): BufferedImage =
+    gridTexture(seed, rnd => 40 + rnd.nextInt(176))
+
+  /** Broadband texture with a TIGHT luminance range around mid-gray:
+    * every aHash cell sits near the global mean (where a gamma map
+    * moves the effective threshold through the dense cluster), while
+    * the DCT spectrum stays broadband and well-conditioned. */
+  def tightTexture(seed: Long, amp: Int): BufferedImage =
+    gridTexture(seed, rnd => 128 - amp + rnd.nextInt(2 * amp + 1))
 }

@@ -95,4 +95,22 @@ class ScratchStoresSpec extends SparkTestBase {
     assert(ScratchStores.fingerprintScans == before + 2,
       "empty snapshot must never satisfy the memo guard")
   }
+
+  test("pathFor fails fast when a build re-enters its own key") {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.ExecutionContext.Implicits.global
+    import scala.concurrent.duration._
+    // re-entry on the building thread would join its own latch and
+    // hang; the future bounds a regression to a failed test
+    val key = s"reentry-${System.nanoTime()}"
+    def consult(build: String => Unit) =
+      ScratchStores.pathFor(key, "graft-reentry-spec")(build)
+    val attempt = Future {
+      val e = intercept[IllegalStateException](consult(_ => consult(_ => ())))
+      (e, consult(_ => ())) // the failed build is evicted: a retry builds
+    }
+    val (e, retried) = Await.result(attempt, 60.seconds)
+    assert(e.getMessage.contains(key), e.getMessage)
+    assert(retried.endsWith("/store"))
+  }
 }

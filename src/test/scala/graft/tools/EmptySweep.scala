@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Empty-input sweep: run every registered query against ZERO-ROW
   * copies of the testdata tables and report anything that throws.
   * The contract being probed: on an empty corpus every query returns
@@ -19,15 +17,7 @@ object EmptySweep {
   def main(args: Array[String]): Unit = {
     val srcSf = args.headOption.getOrElse("/root/testdata/sf0.001")
     val emptyDir = if (args.length > 1) args(1) else "/tmp/graft_empty_sf"
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.GraftSession()
     spark.sparkContext.setLogLevel("ERROR")
     val tables = Seq("region", "nation", "customer", "supplier", "part",
       "orders", "lineitem", "events", "documents", "embeddings")

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
 /** Synthesize an sf1-scale probe dataset by unioning key-shifted
@@ -23,18 +23,7 @@ object ScaleTestdata {
     val dst = args(1)
     val factor = args(2).toInt
     val K = 10000000L // key spacing per copy; >> any sf1 table size
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // events.ts generations vary (NANOS read as int64 under this
-      // conf, or MICROS read as NTZ); the probe copies whichever shape
-      // verbatim and Tables.normalizeEventTs adapts on read either way
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
 
     def read(t: String): DataFrame = spark.read.parquet(s"$src/$t.parquet")
     def write(df: DataFrame, t: String, parts: Int): Unit =

@@ -1,40 +1,27 @@
 package graft.tools
 
 import graft.SparkEntry
-import org.apache.spark.sql.SparkSession
 
 /** Focused per-query measurement harness for the optimization rounds:
-  * times the NAMED queries under exactly Bench's session (extensions,
-  * shuffle partitions = cpus, CBO + catalog stats, star warehouse
-  * warm, JIT pre-pass at sf0.001) so single-query numbers line up with
+  * times the NAMED queries under exactly Bench's session
+  * ([[graft.GraftSession]], catalog stats, star warehouse warm, JIT
+  * pre-pass at sf0.001) so single-query numbers line up with
   * the committed sweep, and optionally dumps `explain("formatted")`
   * for each to `$SPARK_GRAFT_PLANS_DIR/<q>_<tag>.txt` (default
   * plans/r16).
   *
   * Run: sbt "Test/runMain graft.tools.TimeQ [--plans tag] <q...>"
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-  *      SPARK_GRAFT_CPUS (default 32).
+  *      SPARK_GRAFT_CPUS (default 4).
   */
 object TimeQ {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val (planTag, names0) =
       if (args.length >= 2 && args(0) == "--plans") (Some(args(1)), args.drop(2).toSeq)
       else (None, args.toSeq)
     val names = if (names0.nonEmpty) names0 else Seq("q04_revenue_by_nation")
-    val spark = SparkSession.builder()
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.cbo.enabled", "true")
-      .config("spark.sql.cbo.joinReorder.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftSession()
     if (!sys.env.get("SPARK_GRAFT_CATALOG").contains("off"))
       graft.ops.Statistics.registerForQueries(spark, sfDir)
     spark.range(1000000).selectExpr("sum(id)").collect()
