@@ -1,7 +1,6 @@
 package graft.flights
 
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -28,6 +27,15 @@ import org.apache.spark.sql.types._
   *    on re-runs. We rebuild the fact deterministically from staging
   *    (overwrite), making transform idempotent; the hash ledger already
   *    guarantees staging itself is append-once.
+  *
+  * Write layout: every fact commit (the transform's overwrite,
+  * [[commitFactIncrement]] and [[compactFact]]) goes through one
+  * writer that REBALANCEs on `departure_date_id` before `partitionBy`.
+  * Each date lands in one shuffle partition, so while the data is
+  * small (fixture and bench scale) adaptive execution coalesces the
+  * commit to one file per date; a date larger than the advisory
+  * partition size is still split across tasks, so a skewed day never
+  * funnels through one writer.
   */
 class StarWarehouse(spark: SparkSession, root: String) {
   import StarWarehouse._
@@ -83,24 +91,35 @@ class StarWarehouse(spark: SparkSession, root: String) {
     fact.filter(col("departure_date_id").between(from, to))
 
   /** T-9: incremental dim upsert with stable surrogate keys. Returns
-    * the post-upsert dimension. `rows` must be distinct on `nk`. */
+    * the post-upsert dimension. `rows` must be distinct on `nk` and
+    * carry no NULL `nk` (a left-anti join never matches NULL, so a
+    * NULL key would be minted again on every run).
+    *
+    * Probe first: one `isEmpty` over the new keys decides everything.
+    * A steady-state batch (no new keys) returns `existing` as is — no
+    * max-id scan, no ranking, no write. Only a batch with new keys
+    * pays for key minting, and its ranking caches are released before
+    * this returns. */
   private def upsertDim(path: String, schema: StructType, existing: DataFrame,
                         rows: DataFrame, nk: String, idCol: String): DataFrame = {
     val fresh = rows.join(existing.select(nk), Seq(nk), "left_anti")
-    val maxId = existing.agg(coalesce(max(col(idCol)), lit(0L))).head().getLong(0)
-    // two-phase distributed ranking (graft.queries.Stats.globalRank),
-    // not row_number over an unpartitioned window: these dims are tiny,
-    // but an SCD dimension at warehouse scale is not, and the ranking
-    // primitive costs the same here while never funnelling the delta
-    // through one reducer. nk is unique in `rows` (caller contract),
-    // so the order is total and the assigned keys are identical.
-    val keyed = graft.queries.Stats.globalRank(fresh, Seq(nk), "_rn")
-      .withColumn(idCol, lit(maxId) + col("_rn"))
-      .select(schema.fieldNames.map(col).toIndexedSeq: _*)
-    if (!keyed.isEmpty) keyed.write.mode(SaveMode.Append).parquet(path)
-    // readOrEmpty, not a bare read: on a first run where cleaning
-    // dropped every row, nothing was ever written to `path`.
-    readOrEmpty(path, schema)
+    if (fresh.isEmpty) existing
+    else {
+      graft.ops.Dedup.withSketchScope {
+        val maxId = existing.agg(coalesce(max(col(idCol)), lit(0L))).head().getLong(0)
+        // two-phase distributed ranking (graft.queries.Stats.globalRank),
+        // not row_number over an unpartitioned window: these dims are tiny,
+        // but an SCD dimension at warehouse scale is not, and the ranking
+        // primitive costs the same here while never funnelling the delta
+        // through one reducer. nk is unique in `rows` (caller contract),
+        // so the order is total and the assigned keys are identical.
+        graft.queries.Stats.globalRank(fresh, Seq(nk), "_rn")
+          .withColumn(idCol, lit(maxId) + col("_rn"))
+          .select(schema.fieldNames.map(col).toIndexedSeq: _*)
+          .write.mode(SaveMode.Append).parquet(path)
+      }
+      readOrEmpty(path, schema)
+    }
   }
 
   /** T-6/T-8: upsert all three dims for a cleaned batch; returns the
@@ -108,7 +127,10 @@ class StarWarehouse(spark: SparkSession, root: String) {
     * incremental build (foreachBatch). */
   def upsertDimsFor(cleaned: DataFrame): (DataFrame, DataFrame, DataFrame) = {
     // T-6: dim_airlines
-    val airlineRows = cleaned.select(col("airline").as("airline_name")).distinct()
+    // NULL natural keys never reach a dim: the fact drops their rows
+    // at T-12 anyway, and upsertDim would re-mint them every run.
+    val airlineRows = cleaned.select(col("airline").as("airline_name"))
+      .filter(col("airline_name").isNotNull).distinct()
     val airlines = upsertDim(dimAirlinesPath, FlightSchemas.dimAirlines,
       dimAirlines, airlineRows, "airline_name", "airline_id")
 
@@ -118,6 +140,7 @@ class StarWarehouse(spark: SparkSession, root: String) {
     val dst = cleaned.select(col("destination_code").as("airport_code"),
       col("destination_name").as("airport_name"))
     val airportRows = src.unionByName(dst)
+      .filter(col("airport_code").isNotNull)
       .groupBy("airport_code").agg(min("airport_name").as("airport_name"))
     val airports = upsertDim(dimAirportsPath, FlightSchemas.dimAirports,
       dimAirports, airportRows, "airport_code", "airport_id")
@@ -166,11 +189,24 @@ class StarWarehouse(spark: SparkSession, root: String) {
     * shared date partitions, leaving an unclosable duplicate window
     * between the append and any applied-marker write. */
   def commitFactIncrement(batchId: Long, factDf: DataFrame): Unit =
-    factDf.withColumn("ingest_batch", lit(batchId))
+    writeFact(factDf.withColumn("ingest_batch", lit(batchId)), factPath,
+      dynamicOverwrite = true)
+
+  /** The one fact writer (see the class doc's write layout): overwrite
+    * `dest` partitioned by `departure_date_id`, under `ingest_batch`
+    * first when `df` carries it, after a REBALANCE on the date so each
+    * date is written by one task unless it is skewed. */
+  private def writeFact(df: DataFrame, dest: String,
+                        dynamicOverwrite: Boolean = false): Unit = {
+    val parts =
+      if (df.columns.contains("ingest_batch")) Seq("ingest_batch", "departure_date_id")
+      else Seq("departure_date_id")
+    df.hint("rebalance", col("departure_date_id"))
       .write.mode(SaveMode.Overwrite)
-      .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("ingest_batch", "departure_date_id")
-      .parquet(factPath)
+      .option("partitionOverwriteMode", if (dynamicOverwrite) "dynamic" else "static")
+      .partitionBy(parts: _*)
+      .parquet(dest)
+  }
 
   /** Compact the streaming increment layout: merge every
     * `ingest_batch=N` subtree into a single `ingest_batch=-1` base
@@ -219,10 +255,7 @@ class StarWarehouse(spark: SparkSession, root: String) {
     val markers = new java.io.File(s"$root/_applied_batches")
     markers.mkdirs()
     increments.foreach(id => new java.io.File(markers, id).createNewFile())
-    fact.withColumn("ingest_batch", lit(-1L))
-      .write.mode(SaveMode.Overwrite)
-      .partitionBy("ingest_batch", "departure_date_id")
-      .parquet(tmp.toString)
+    writeFact(fact.withColumn("ingest_batch", lit(-1L)), tmp.toString)
     fs.delete(bak, true)
     fs.rename(p, bak)
     fs.rename(tmp, p)
@@ -239,8 +272,7 @@ class StarWarehouse(spark: SparkSession, root: String) {
     val (airlines, airports, _) = upsertDimsFor(cleaned)
     val factDf = factRowsFor(cleaned, airlines, airports)
 
-    factDf.write.mode(SaveMode.Overwrite)
-      .partitionBy("departure_date_id").parquet(factPath)
+    writeFact(factDf, factPath)
     // count the committed files (schema-pinned read handles the
     // file-less all-dropped case) — cheaper than re-running the plan
     val factRows = fact.count()

@@ -1,6 +1,10 @@
 package graft.flights
 
+import java.io.File
+
 import graft.SparkTestBase
+import org.apache.spark.TestListenerBus
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
 
@@ -11,6 +15,24 @@ class StarSchemaSpec extends SparkTestBase {
     FlightSchemas.renameToStaging(
       spark.read.schema(FlightSchemas.rawCsv).option("header", true)
         .csv(resource(name)))
+
+  private def parquetFiles(dir: File): Seq[File] =
+    Option(dir.listFiles()).getOrElse(Array.empty[File]).toSeq
+      .filter(_.getName.endsWith(".parquet"))
+
+  /** Every file under `dir`, with its size and modification time. */
+  private def fileStamps(dir: File): Set[(String, Long, Long)] =
+    Option(dir.listFiles()).getOrElse(Array.empty[File]).toSet.flatMap { (f: File) =>
+      if (f.isDirectory) fileStamps(f)
+      else Set((f.getPath, f.length(), f.lastModified()))
+    }
+
+  /** MD5 of the frame's rows, rendered and sorted. */
+  private def rowsDigest(df: DataFrame): String = {
+    val text = df.collect().map(_.mkString("|")).sorted.mkString("\n")
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(text.getBytes("UTF-8")).map("%02x".format(_)).mkString
+  }
 
   test("transform builds the 13-column fact and three dims") {
     val wh = new StarWarehouse(spark, tmpDir("star"))
@@ -81,5 +103,80 @@ class StarSchemaSpec extends SparkTestBase {
       wh.dimAirports.select(col("airport_id").as("source_airport_id")),
       Seq("source_airport_id"), "left_anti")
     assert(orphanAirports.isEmpty)
+  }
+
+  test("NULL natural keys are never minted; repeated runs keep ids and facts") {
+    val root = tmpDir("star")
+    val wh = new StarWarehouse(spark, root)
+    val base = stagingFromCsv("flights_small.csv")
+    val staging = base
+      .unionByName(base.limit(1).withColumn("airline", lit(null).cast("string")))
+      .unionByName(base.limit(1).withColumn("source_code", lit(null).cast("string")))
+    val s1 = wh.transform(staging)
+    val airlines1 = wh.dimAirlines.as[(Long, String)].collect().toMap
+    val airports1 = wh.dimAirports.as[(Long, String, String)].collect().toSet
+    wh.transform(staging)
+    val s3 = wh.transform(staging)
+    assert(wh.dimAirlines.filter(col("airline_name").isNull).isEmpty)
+    assert(wh.dimAirports.filter(col("airport_code").isNull).isEmpty)
+    assert(wh.dimAirlines.as[(Long, String)].collect().toMap == airlines1)
+    assert(wh.dimAirports.as[(Long, String, String)].collect().toSet == airports1)
+    assert(airlines1.keys.toSeq.sorted == (1L to 4L))
+    // both NULL-key rows drop from the fact (T-12), on every run
+    assert(s1.factRows == 44 && s3.factRows == 44)
+  }
+
+  test("a transform that mints new keys leaves no persistent RDDs behind") {
+    val wh = new StarWarehouse(spark, tmpDir("star"))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    wh.transform(stagingFromCsv("flights_small.csv"))
+    assert(wh.dimAirlines.count() == 4) // keys were minted
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
+  }
+
+  test("transform writes one parquet file per date; fact rows unchanged") {
+    val root = tmpDir("star")
+    val wh = new StarWarehouse(spark, root)
+    // spread over four partitions, so several tasks hold rows of a date
+    wh.transform(stagingFromCsv("flights_small.csv").repartition(4))
+    val dateDirs = new File(wh.factPath).listFiles()
+      .filter(d => d.isDirectory && d.getName.startsWith("departure_date_id="))
+    assert(dateDirs.nonEmpty)
+    dateDirs.foreach(d =>
+      assert(parquetFiles(d).size == 1, s"${d.getName}: ${parquetFiles(d).map(_.getName)}"))
+    // digest of the fact this fixture produced before the rebalanced
+    // layout: the write layout moves rows between files, never changes them
+    assert(wh.fact.count() == 44)
+    assert(rowsDigest(wh.fact) == "b44f3a1ca66e678531afeb855cebb497")
+  }
+
+  test("steady-state dim upsert: probe-only jobs, no dimension writes") {
+    val root = tmpDir("star")
+    val wh = new StarWarehouse(spark, root)
+    val cleaned = Cleaning.clean(stagingFromCsv("flights_small.csv")).cache()
+    try {
+      wh.upsertDimsFor(cleaned) // first run mints every key
+      val dimDirs = Seq(wh.dimAirlinesPath, wh.dimAirportsPath, wh.dimDatePath).map(new File(_))
+      val filesBefore = dimDirs.map(fileStamps)
+      val group = s"steady-${System.nanoTime()}"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(listener)
+      spark.sparkContext.setJobGroup(group, "steady-state upsert")
+      try wh.upsertDimsFor(cleaned)
+      finally {
+        spark.sparkContext.clearJobGroup()
+        TestListenerBus.drain(spark.sparkContext)
+        spark.sparkContext.removeSparkListener(listener)
+      }
+      // one isEmpty probe per dimension; before the probe-first rule the
+      // same call ran 18 jobs (max-id scan and ranking on empty deltas)
+      assert(jobs.get() == 6, s"steady-state upsert ran ${jobs.get()} jobs")
+      assert(dimDirs.map(fileStamps) == filesBefore)
+    } finally cleaned.unpersist()
   }
 }

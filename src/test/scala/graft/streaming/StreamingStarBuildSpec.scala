@@ -4,16 +4,19 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
 
 import graft.SparkTestBase
 import graft.flights.{FlightSchemas, StarWarehouse}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class StreamingStarBuildSpec extends SparkTestBase {
   import spark.implicits._
 
-  private def stage(csv: String, outDir: String): Unit =
+  private def staged(csv: String): DataFrame =
     FlightSchemas.renameToStaging(
       spark.read.schema(FlightSchemas.rawCsv).option("header", true)
         .csv(resource(csv)))
-      .write.mode("append").parquet(outDir)
+
+  private def stage(csv: String, outDir: String): Unit =
+    staged(csv).write.mode("append").parquet(outDir)
 
   test("micro-batches accumulate facts; dims converge with stable keys") {
     val root = tmpDir("sstar")
@@ -193,5 +196,36 @@ class StreamingStarBuildSpec extends SparkTestBase {
     assert(wh.fact.count() == 50)
     assert(wh.dimAirlines.count() == dimRows)
     assert(Files.exists(Paths.get(s"$root/wh/_applied_batches/0"))) // healed
+  }
+
+  test("every commit writes one parquet file per date: micro-batch and compaction") {
+    val root = tmpDir("sstar")
+    val stagingDir = s"$root/staging"
+    val wh = new StarWarehouse(spark, s"$root/wh")
+    def dateDirs(): Seq[java.io.File] =
+      new java.io.File(wh.factPath).listFiles().toSeq
+        .filter(b => b.isDirectory && b.getName.startsWith("ingest_batch="))
+        .flatMap(_.listFiles().toSeq.filter(_.isDirectory))
+    def assertOneFilePerDate(): Unit = {
+      val dirs = dateDirs()
+      assert(dirs.nonEmpty)
+      dirs.foreach { d =>
+        val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
+        assert(files.length == 1, s"${d.getParentFile.getName}/${d.getName}: ${files.toSeq}")
+      }
+    }
+    // four staged files per batch, so several tasks hold rows of a date
+    Seq("flights_clean.csv", "flights_small.csv").foreach { csv =>
+      staged(csv).repartition(4).write.mode("append").parquet(stagingDir)
+      StreamingStarBuild.start(spark, stagingDir, s"$root/wh", s"$root/ckpt")
+        .awaitTermination()
+    }
+    assert(dateDirs().map(_.getParentFile.getName).toSet ==
+      Set("ingest_batch=0", "ingest_batch=1"))
+    assertOneFilePerDate()
+    wh.compactFact()
+    assert(dateDirs().map(_.getParentFile.getName).toSet == Set("ingest_batch=-1"))
+    assertOneFilePerDate()
+    assert(wh.fact.count() == 94)
   }
 }
