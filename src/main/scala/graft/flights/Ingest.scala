@@ -285,23 +285,25 @@ class FlightIngest(spark: SparkSession, root: String) {
     val hashed = rowHash(raw).dropDuplicates("row_hash")
     val freshRows = hashed
       .join(ledger.select("row_hash"), Seq("row_hash"), "left_anti").cache()
-    val freshCount = freshRows.count()
-    if (freshCount > 0) {
-      FlightSchemas.renameToStaging(freshRows.drop("row_hash"))
-        .withColumn("ingest_batch", lit(seq))
-        .write.partitionBy("ingest_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(SaveMode.Overwrite).parquet(stagingPath)
-      afterStagingWrite()
-      freshRows.select(col("row_hash"))
-        .withColumn("load_timestamp", current_timestamp())
-        .withColumn("ingest_batch", lit(seq))
-        .write.partitionBy("ingest_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(SaveMode.Overwrite).parquet(ledgerPath)
-      afterLedgerWrite()
-    }
-    freshRows.unpersist()
+    val freshCount = try {
+      val n = freshRows.count()
+      if (n > 0) {
+        FlightSchemas.renameToStaging(freshRows.drop("row_hash"))
+          .withColumn("ingest_batch", lit(seq))
+          .write.partitionBy("ingest_batch")
+          .option("partitionOverwriteMode", "dynamic")
+          .mode(SaveMode.Overwrite).parquet(stagingPath)
+        afterStagingWrite()
+        freshRows.select(col("row_hash"))
+          .withColumn("load_timestamp", current_timestamp())
+          .withColumn("ingest_batch", lit(seq))
+          .write.partitionBy("ingest_batch")
+          .option("partitionOverwriteMode", "dynamic")
+          .mode(SaveMode.Overwrite).parquet(ledgerPath)
+        afterLedgerWrite()
+      }
+      n
+    } finally freshRows.unpersist()
     entries.foreach { case (_, e) => writeOffsetOf(e.key, e.end) }
     clearBatchMarker()
     (IngestResult(entries.map(_._2.end).sum, freshCount, entries.last._2.end),
@@ -382,42 +384,44 @@ class FlightIngest(spark: SparkSession, root: String) {
     // I-11: one distributed anti-join replaces per-chunk IN-probes.
     val fresh = hashed.join(ledger.select("row_hash"), Seq("row_hash"), "left_anti")
       .cache()
-    val freshCount = fresh.count()
+    val freshCount = try {
+      val n = fresh.count()
 
-    // I-13 rename + I-12 drop helper column, then I-7 staging write.
-    // Staging is touched ONLY when the deduped batch is non-empty,
-    // exactly as the reference skips to_sql for an empty chunk
-    // (ingestion.py:117-119): a fully-committed batch whose retry
-    // recomputes freshCount == 0 leaves staging INTACT and only
-    // advances the offset. Consequence on a shrink-reset whose "new"
-    // file is all already-seen rows: stale staging rows from the
-    // replaced file remain and V-3 alarms on source != staging — the
-    // reference behaves identically there (global-forever ledger).
-    val renamed = FlightSchemas.renameToStaging(fresh.drop("row_hash"))
-    if (freshCount > 0) {
-      val staged = renamed.withColumn("ingest_batch", lit(seq))
-        .write.partitionBy("ingest_batch").mode(SaveMode.Overwrite)
-      // I-7 replace semantics apply to the SINGLETON contract only: in
-      // directory mode (stateKey set) staging holds other files'
-      // partitions, which a static overwrite would silently wipe — a
-      // later file's first load must land beside them, not replace
-      // them. Consequence: a file REPLACED in place keeps its old rows
-      // under their old seqs (same documented residue as the all-seen
-      // shrink reset; V-3 alarms, compaction is the cleanup path).
-      if (off == 0 && stateKey.isEmpty) staged.parquet(stagingPath)
-      else staged.option("partitionOverwriteMode", "dynamic").parquet(stagingPath)
-      afterStagingWrite() // crash-injection seam (no-op in production)
-      // I-8: ledger append with load timestamp — as an idempotent
-      // overwrite of this batch's own partition.
-      fresh.select(col("row_hash"))
-        .withColumn("load_timestamp", current_timestamp())
-        .withColumn("ingest_batch", lit(seq))
-        .write.partitionBy("ingest_batch")
-        .option("partitionOverwriteMode", "dynamic")
-        .mode(SaveMode.Overwrite).parquet(ledgerPath)
-      afterLedgerWrite() // crash-injection seam (no-op in production)
-    }
-    fresh.unpersist()
+      // I-13 rename + I-12 drop helper column, then I-7 staging write.
+      // Staging is touched ONLY when the deduped batch is non-empty,
+      // exactly as the reference skips to_sql for an empty chunk
+      // (ingestion.py:117-119): a fully-committed batch whose retry
+      // recomputes freshCount == 0 leaves staging INTACT and only
+      // advances the offset. Consequence on a shrink-reset whose "new"
+      // file is all already-seen rows: stale staging rows from the
+      // replaced file remain and V-3 alarms on source != staging — the
+      // reference behaves identically there (global-forever ledger).
+      val renamed = FlightSchemas.renameToStaging(fresh.drop("row_hash"))
+      if (n > 0) {
+        val staged = renamed.withColumn("ingest_batch", lit(seq))
+          .write.partitionBy("ingest_batch").mode(SaveMode.Overwrite)
+        // I-7 replace semantics apply to the SINGLETON contract only: in
+        // directory mode (stateKey set) staging holds other files'
+        // partitions, which a static overwrite would silently wipe — a
+        // later file's first load must land beside them, not replace
+        // them. Consequence: a file REPLACED in place keeps its old rows
+        // under their old seqs (same documented residue as the all-seen
+        // shrink reset; V-3 alarms, compaction is the cleanup path).
+        if (off == 0 && stateKey.isEmpty) staged.parquet(stagingPath)
+        else staged.option("partitionOverwriteMode", "dynamic").parquet(stagingPath)
+        afterStagingWrite() // crash-injection seam (no-op in production)
+        // I-8: ledger append with load timestamp — as an idempotent
+        // overwrite of this batch's own partition.
+        fresh.select(col("row_hash"))
+          .withColumn("load_timestamp", current_timestamp())
+          .withColumn("ingest_batch", lit(seq))
+          .write.partitionBy("ingest_batch")
+          .option("partitionOverwriteMode", "dynamic")
+          .mode(SaveMode.Overwrite).parquet(ledgerPath)
+        afterLedgerWrite() // crash-injection seam (no-op in production)
+      }
+      n
+    } finally fresh.unpersist()
     // I-9: offset advances by rows *scanned* (incl. dupes), as in the
     // reference (ingestion.py:126: offset + rows_processed).
     writeOffset(end)

@@ -30,12 +30,15 @@ import org.apache.spark.sql.types._
   *
   * Write layout: every fact commit (the transform's overwrite,
   * [[commitFactIncrement]] and [[compactFact]]) goes through one
-  * writer that REBALANCEs on `departure_date_id` before `partitionBy`.
-  * Each date lands in one shuffle partition, so while the data is
-  * small (fixture and bench scale) adaptive execution coalesces the
-  * commit to one file per date; a date larger than the advisory
-  * partition size is still split across tasks, so a skewed day never
-  * funnels through one writer.
+  * writer that REBALANCEs on `departure_date_id` and writes flat
+  * files: no directory per date, only the streaming `ingest_batch=N`
+  * level. Each date lands in one shuffle partition, so a date's rows
+  * stay in one file, and while the data is small (fixture and bench
+  * scale) adaptive execution coalesces the commit to one file; a date
+  * larger than the advisory partition size is still split across
+  * tasks, so a skewed day never funnels through one writer. No KPI
+  * prunes by date, so a directory per date bought nothing but a file
+  * per date and commit to create and to open on every scan.
   */
 class StarWarehouse(spark: SparkSession, root: String) {
   import StarWarehouse._
@@ -55,17 +58,24 @@ class StarWarehouse(spark: SparkSession, root: String) {
   def dimAirports: DataFrame = readOrEmpty(dimAirportsPath, FlightSchemas.dimAirports)
   def dimDate: DataFrame     = readOrEmpty(dimDatePath, FlightSchemas.dimDate)
 
-  /** The fact is stored partitioned by departure_date_id (the
-    * time-series access path: K-3/K-5 and any date-range analysis
-    * prune partitions at the source). Schema-pinned read: no
-    * inference, and a file-less directory (all-dropped batch) reads
-    * as empty instead of failing; columns re-ordered to the canonical
-    * projection since partition columns surface last.
+  /** The fact, read through the pinned schema: no inference, and a
+    * file-less directory (all-dropped batch) reads as empty instead of
+    * failing; columns re-ordered to the canonical projection since
+    * partition columns surface last.
     *
-    * Two layouts are understood: the batch transform's flat
-    * `departure_date_id=` partitioning, and the streaming build's
-    * `ingest_batch=N/departure_date_id=` increments (see
-    * [[commitFactIncrement]]); the increment column never escapes. */
+    * Two layouts are understood: the batch transform's flat files, and
+    * the streaming build's `ingest_batch=N` increments (see
+    * [[commitFactIncrement]]); the increment column never escapes.
+    * `departure_date_id` is an ordinary column of the files.
+    *
+    * The previous layout, a `departure_date_id=D` directory per date,
+    * still reads (the date then comes from the directory name), as long
+    * as one fact does not mix depths: Spark's partition discovery
+    * rejects a tree with both `ingest_batch=N/departure_date_id=D/` and
+    * flat `ingest_batch=N/` files. An increment layout written by the
+    * previous code must therefore be compacted once ([[compactFact]])
+    * before the first new micro-batch; a batch fact is rewritten flat
+    * by the next [[transform]]. */
   def fact: DataFrame = {
     val schema =
       if (hasIncrementLayout)
@@ -85,8 +95,10 @@ class StarWarehouse(spark: SparkSession, root: String) {
       s.isDirectory && s.getPath.getName.startsWith("ingest_batch="))
   }
 
-  /** Date-bounded fact scan — partition pruning makes this touch only
-    * the in-range directories (PartitionFilters in explain). */
+  /** Date-bounded fact scan: a filter on the date column that the
+    * parquet scan receives as pushed data filters (PushedFilters in
+    * explain), so row groups whose date statistics miss the range are
+    * skipped. */
   def factForDateRange(from: String, to: String): DataFrame =
     fact.filter(col("departure_date_id").between(from, to))
 
@@ -193,18 +205,15 @@ class StarWarehouse(spark: SparkSession, root: String) {
       dynamicOverwrite = true)
 
   /** The one fact writer (see the class doc's write layout): overwrite
-    * `dest` partitioned by `departure_date_id`, under `ingest_batch`
-    * first when `df` carries it, after a REBALANCE on the date so each
-    * date is written by one task unless it is skewed. */
+    * `dest` with flat files, under `ingest_batch` when `df` carries it,
+    * after a REBALANCE on the date so each date is written by one task
+    * unless it is skewed. */
   private def writeFact(df: DataFrame, dest: String,
                         dynamicOverwrite: Boolean = false): Unit = {
-    val parts =
-      if (df.columns.contains("ingest_batch")) Seq("ingest_batch", "departure_date_id")
-      else Seq("departure_date_id")
-    df.hint("rebalance", col("departure_date_id"))
+    val w = df.hint("rebalance", col("departure_date_id"))
       .write.mode(SaveMode.Overwrite)
       .option("partitionOverwriteMode", if (dynamicOverwrite) "dynamic" else "static")
-      .partitionBy(parts: _*)
+    (if (df.columns.contains("ingest_batch")) w.partitionBy("ingest_batch") else w)
       .parquet(dest)
   }
 
@@ -225,7 +234,13 @@ class StarWarehouse(spark: SparkSession, root: String) {
     * of GC and compaction.
     * Crash-safe via build-aside + swap: the new dir is fully written
     * before the old one is touched, and a torn swap is healed on the
-    * next call (the `.pre-compact` backup is restored first). */
+    * next call (the `.pre-compact` backup is restored first).
+    *
+    * The base is written in the current flat layout, so compaction is
+    * also the one-time migration of an increment layout written by the
+    * previous code (`ingest_batch=N/departure_date_id=D/`): run it once
+    * before the first new micro-batch, because a fact that mixes both
+    * depths fails partition discovery (see [[fact]]). */
   def compactFact(): Unit = {
     val conf = spark.sparkContext.hadoopConfiguration
     val p = new org.apache.hadoop.fs.Path(factPath)
@@ -267,17 +282,15 @@ class StarWarehouse(spark: SparkSession, root: String) {
   def transform(staging: DataFrame): TransformStats = {
     val rowsIn = staging.count()
     val cleaned = Cleaning.clean(staging).cache()
-    val rowsClean = cleaned.count() // materializes the cache; T-5 drop count
+    try {
+      val rowsClean = cleaned.count() // materializes the cache; T-5 drop count
 
-    val (airlines, airports, _) = upsertDimsFor(cleaned)
-    val factDf = factRowsFor(cleaned, airlines, airports)
-
-    writeFact(factDf, factPath)
-    // count the committed files (schema-pinned read handles the
-    // file-less all-dropped case) — cheaper than re-running the plan
-    val factRows = fact.count()
-    cleaned.unpersist()
-    TransformStats(rowsIn, rowsIn - rowsClean, factRows)
+      val (airlines, airports, _) = upsertDimsFor(cleaned)
+      writeFact(factRowsFor(cleaned, airlines, airports), factPath)
+      // count the committed files (schema-pinned read handles the
+      // file-less all-dropped case) — cheaper than re-running the plan
+      TransformStats(rowsIn, rowsIn - rowsClean, fact.count())
+    } finally cleaned.unpersist()
   }
 }
 

@@ -1,7 +1,7 @@
 package graft.queries
 
 import graft.flights.StarWarehouse
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** The KPI surface the star schema exists to serve (SURVEY.md §2.4,
@@ -18,34 +18,50 @@ import org.apache.spark.sql.functions._
   * K-1 intentionally returns BOTH avg(total_fare) and avg(base_fare):
   * the report's prose and its dashboard disagree (SURVEY §1.2), so the
   * engine serves both.
+  *
+  * K-1, K-2, K-3 and K-5 sort their grouped result in ONE partition
+  * ([[sortedInOne]]): the groups never outnumber a dimension's rows
+  * (airlines, seasonality labels of dim_date, dates of dim_date), so
+  * the sort runs in the final aggregate's task. A global `orderBy`
+  * would plan a range exchange, a sampling job plus a map stage, to
+  * sort a few dozen rows. K-4 keeps `orderBy` + `limit`, which plans a
+  * take-ordered with no exchange of its own.
   */
 object Kpi {
+  /** Sort a grouped result that is bounded by a dimension's row count
+    * in one partition, with no range exchange (see the object doc). */
+  private def sortedInOne(grouped: DataFrame, order: Column*): DataFrame =
+    grouped.coalesce(1).orderBy(order: _*)
+
   /** K-1: average fare by airline. */
   def avgFareByAirline(wh: StarWarehouse): DataFrame =
-    wh.fact.join(broadcast(wh.dimAirlines), Seq("airline_id"))
-      .groupBy(col("airline_name"))
-      .agg(
-        Qx.davg(col("total_fare"), rescale = 2).as("avg_total_fare"),
-        Qx.davg(col("base_fare"), rescale = 2).as("avg_base_fare"),
-        count(lit(1)).as("n_flights"))
-      .orderBy(col("airline_name"))
+    sortedInOne(
+      wh.fact.join(broadcast(wh.dimAirlines), Seq("airline_id"))
+        .groupBy(col("airline_name"))
+        .agg(
+          Qx.davg(col("total_fare"), rescale = 2).as("avg_total_fare"),
+          Qx.davg(col("base_fare"), rescale = 2).as("avg_base_fare"),
+          count(lit(1)).as("n_flights")),
+      col("airline_name"))
 
   /** K-2: booking demand by airline. */
   def bookingsByAirline(wh: StarWarehouse): DataFrame =
-    wh.fact.join(broadcast(wh.dimAirlines), Seq("airline_id"))
-      .groupBy(col("airline_name"))
-      .agg(count(lit(1)).as("n_bookings"))
-      .orderBy(col("n_bookings").desc, col("airline_name"))
+    sortedInOne(
+      wh.fact.join(broadcast(wh.dimAirlines), Seq("airline_id"))
+        .groupBy(col("airline_name"))
+        .agg(count(lit(1)).as("n_bookings")),
+      col("n_bookings").desc, col("airline_name"))
 
   /** K-3: seasonal fare variation via dim_date.seasonality. */
   def seasonalFares(wh: StarWarehouse): DataFrame = {
     val fact = wh.fact
     val dates = wh.dimDate
-    fact.join(broadcast(dates), fact("departure_date_id") === dates("date_id"))
-      .groupBy(col("seasonality"))
-      .agg(Qx.davg(col("total_fare"), rescale = 2).as("avg_total_fare"),
-        count(lit(1)).as("n_flights"))
-      .orderBy(col("seasonality"))
+    sortedInOne(
+      fact.join(broadcast(dates), fact("departure_date_id") === dates("date_id"))
+        .groupBy(col("seasonality"))
+        .agg(Qx.davg(col("total_fare"), rescale = 2).as("avg_total_fare"),
+          count(lit(1)).as("n_flights")),
+      col("seasonality"))
   }
 
   /** K-4: most popular routes (top-k), airport dim joined twice under
@@ -67,8 +83,9 @@ object Kpi {
 
   /** K-5: fare trend over departure date. */
   def fareTrend(wh: StarWarehouse): DataFrame =
-    wh.fact.groupBy(col("departure_date_id"))
-      .agg(Qx.davg(col("total_fare"), rescale = 2).as("avg_total_fare"),
-        count(lit(1)).as("n_flights"))
-      .orderBy(col("departure_date_id"))
+    sortedInOne(
+      wh.fact.groupBy(col("departure_date_id"))
+        .agg(Qx.davg(col("total_fare"), rescale = 2).as("avg_total_fare"),
+          count(lit(1)).as("n_flights")),
+      col("departure_date_id"))
 }

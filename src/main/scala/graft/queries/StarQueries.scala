@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * The warehouse is built once per JVM (all six queries and repeated
   * Bench iterations reuse it); the build goes through the REAL
   * incremental-ingest path including the hash ledger, intra-batch
-  * dedup, dim upserts and the partitioned fact write.
+  * dedup, dim upserts and the fact write.
   */
 object StarQueries {
   type Q = (SparkSession, String) => DataFrame

@@ -8,7 +8,8 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   * the batch transform. Each micro-batch of freshly-staged rows is
   * cleaned, dims are upserted (append-stable surrogate keys — the
   * same single-writer upsert the batch path uses), and the fact
-  * increment is APPENDED into the date-partitioned fact.
+  * increment is committed as its own `ingest_batch=N` subtree of flat
+  * files beside the earlier increments.
   *
   * foreachBatch is the right tool here (not a plain streaming sink):
   * the dim upsert is a multi-table step that needs batch-DataFrame

@@ -405,6 +405,21 @@ class IngestSpec extends SparkTestBase {
     assert(!Files.exists(Paths.get(s"$root/state/flight_inflight__dirbatch")))
   }
 
+  test("a crash after the staging write releases the cached batch") {
+    val (_, root, dir) = disjointDir()
+    val csv = s"$root/flights.csv"
+    Files.copy(Paths.get(resource("flights_small.csv")), Paths.get(csv))
+    val crashing = new FlightIngest(spark, root) {
+      override protected def afterStagingWrite(): Unit =
+        throw new RuntimeException("injected crash")
+    }
+    val before = spark.sparkContext.getPersistentRDDs.size
+    intercept[RuntimeException](crashing.ingest(csv))
+    assert(spark.sparkContext.getPersistentRDDs.size == before, "single-file batch")
+    intercept[RuntimeException](crashing.ingestDirectory(dir))
+    assert(spark.sparkContext.getPersistentRDDs.size == before, "directory batch")
+  }
+
   test("batched directory ingest: crash after ledger finalizes offsets without rescanning") {
     val (_, root, dir) = disjointDir()
     val crashing = new FlightIngest(spark, root) {

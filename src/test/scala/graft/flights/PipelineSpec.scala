@@ -38,4 +38,35 @@ class PipelineSpec extends SparkTestBase {
       Validation.validate(Validation.Counts(1000, 1000, 989)))
     assert(e.getMessage.contains("High Data Loss"))
   }
+
+  /** The three counts as separate queries, with the CSV header inferred. */
+  private def separateCounts(csv: String, staging: String, fact: String): Validation.Counts =
+    Validation.Counts(
+      spark.read.option("header", true).csv(csv).count(),
+      spark.read.parquet(staging).count(),
+      spark.read.parquet(fact).count())
+
+  test("gate counts: one query equals the three separate counts, in at most 2 jobs") {
+    val root = tmpDir("pipe")
+    val ingest = new FlightIngest(spark, root)
+    val wh = new StarWarehouse(spark, s"$root/analytics")
+    ingest.ingest(resource("flights_small.csv"))
+    wh.transform(ingest.staging)
+    val expected = separateCounts(resource("flights_small.csv"), ingest.stagingPath, wh.factPath)
+    assert(expected == Validation.Counts(49, 49, 44))
+    var c: Validation.Counts = null
+    val jobs = jobsIn { c = Validation.counts(spark, resource("flights_small.csv"),
+      ingest.stagingPath, wh.factPath) }
+    assert(c == expected)
+    assert(jobs <= 2, s"Validation.counts ran $jobs jobs")
+
+    // the streaming input shape: a directory of CSV files, each with a header
+    val dir = s"$root/csvdir"
+    Files.createDirectories(Paths.get(dir))
+    Files.copy(Paths.get(resource("flights_small.csv")), Paths.get(s"$dir/a.csv"))
+    Files.copy(Paths.get(resource("flights_clean.csv")), Paths.get(s"$dir/b.csv"))
+    val fromDir = Validation.counts(spark, dir, ingest.stagingPath, wh.factPath)
+    assert(fromDir == separateCounts(dir, ingest.stagingPath, wh.factPath))
+    assert(fromDir.source == 99)
+  }
 }

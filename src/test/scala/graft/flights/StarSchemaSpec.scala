@@ -1,11 +1,10 @@
 package graft.flights
 
 import java.io.File
+import java.nio.file.{Files, Paths}
 
 import graft.SparkTestBase
-import org.apache.spark.TestListenerBus
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.{DataFrame, SaveMode}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class StarSchemaSpec extends SparkTestBase {
@@ -19,6 +18,11 @@ class StarSchemaSpec extends SparkTestBase {
   private def parquetFiles(dir: File): Seq[File] =
     Option(dir.listFiles()).getOrElse(Array.empty[File]).toSeq
       .filter(_.getName.endsWith(".parquet"))
+
+  /** Every `departure_date_id=` directory under `dir`, at any depth. */
+  private def dateDirs(dir: File): Seq[File] =
+    Option(dir.listFiles()).getOrElse(Array.empty[File]).toSeq.filter(_.isDirectory)
+      .flatMap(d => (if (d.getName.startsWith("departure_date_id=")) Seq(d) else Nil) ++ dateDirs(d))
 
   /** Every file under `dir`, with its size and modification time. */
   private def fileStamps(dir: File): Set[(String, Long, Long)] =
@@ -134,20 +138,59 @@ class StarSchemaSpec extends SparkTestBase {
     assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
-  test("transform writes one parquet file per date; fact rows unchanged") {
+  test("transform writes one flat fact file per commit; rows unchanged") {
     val root = tmpDir("star")
     val wh = new StarWarehouse(spark, root)
     // spread over four partitions, so several tasks hold rows of a date
     wh.transform(stagingFromCsv("flights_small.csv").repartition(4))
-    val dateDirs = new File(wh.factPath).listFiles()
-      .filter(d => d.isDirectory && d.getName.startsWith("departure_date_id="))
-    assert(dateDirs.nonEmpty)
-    dateDirs.foreach(d =>
-      assert(parquetFiles(d).size == 1, s"${d.getName}: ${parquetFiles(d).map(_.getName)}"))
+    val factDir = new File(wh.factPath)
+    assert(parquetFiles(factDir).size == 1, parquetFiles(factDir).map(_.getName))
+    assert(dateDirs(factDir).isEmpty)
     // digest of the fact this fixture produced before the rebalanced
     // layout: the write layout moves rows between files, never changes them
     assert(wh.fact.count() == 44)
     assert(rowsDigest(wh.fact) == "b44f3a1ca66e678531afeb855cebb497")
+  }
+
+  test("previous per-date layout reads back; transform and compaction rewrite it flat") {
+    val flat = new StarWarehouse(spark, tmpDir("star"))
+    flat.transform(stagingFromCsv("flights_small.csv"))
+    val digest = rowsDigest(flat.fact)
+
+    // batch form: departure_date_id=D/
+    val batch = new StarWarehouse(spark, tmpDir("star"))
+    flat.fact.write.partitionBy("departure_date_id").parquet(batch.factPath)
+    assert(dateDirs(new File(batch.factPath)).nonEmpty)
+    assert(rowsDigest(batch.fact) == digest)
+    batch.transform(stagingFromCsv("flights_small.csv"))
+    assert(dateDirs(new File(batch.factPath)).isEmpty)
+    assert(parquetFiles(new File(batch.factPath)).size == 1)
+    assert(rowsDigest(batch.fact) == digest)
+
+    // streaming increment form: ingest_batch=N/departure_date_id=D/
+    val inc = new StarWarehouse(spark, tmpDir("star"))
+    flat.fact.withColumn("ingest_batch", (col("airline_id") % 2).cast("long"))
+      .write.partitionBy("ingest_batch", "departure_date_id").parquet(inc.factPath)
+    assert(rowsDigest(inc.fact) == digest)
+    inc.compactFact()
+    val incDir = new File(inc.factPath)
+    assert(incDir.listFiles().filter(_.isDirectory).map(_.getName).toSet ==
+      Set("ingest_batch=-1"))
+    assert(dateDirs(incDir).isEmpty)
+    assert(parquetFiles(new File(incDir, "ingest_batch=-1")).size == 1)
+    assert(rowsDigest(inc.fact) == digest)
+  }
+
+  test("a transform whose fact write fails releases its cache") {
+    val root = tmpDir("star")
+    val wh = new StarWarehouse(spark, root)
+    // the fact path links into a plain file, so the write cannot create
+    // its directory (an overwrite would just delete a plain file there)
+    val occupied = Files.write(Paths.get(s"$root/occupied"), "not a fact".getBytes("UTF-8"))
+    Files.createSymbolicLink(Paths.get(wh.factPath), occupied.resolve("fact"))
+    val before = spark.sparkContext.getPersistentRDDs.size
+    intercept[Exception](wh.transform(stagingFromCsv("flights_small.csv")))
+    assert(spark.sparkContext.getPersistentRDDs.size == before)
   }
 
   test("steady-state dim upsert: probe-only jobs, no dimension writes") {
@@ -158,24 +201,10 @@ class StarSchemaSpec extends SparkTestBase {
       wh.upsertDimsFor(cleaned) // first run mints every key
       val dimDirs = Seq(wh.dimAirlinesPath, wh.dimAirportsPath, wh.dimDatePath).map(new File(_))
       val filesBefore = dimDirs.map(fileStamps)
-      val group = s"steady-${System.nanoTime()}"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger()
-      val listener = new SparkListener {
-        override def onJobStart(e: SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
-            jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(listener)
-      spark.sparkContext.setJobGroup(group, "steady-state upsert")
-      try wh.upsertDimsFor(cleaned)
-      finally {
-        spark.sparkContext.clearJobGroup()
-        TestListenerBus.drain(spark.sparkContext)
-        spark.sparkContext.removeSparkListener(listener)
-      }
+      val jobs = jobsIn(wh.upsertDimsFor(cleaned))
       // one isEmpty probe per dimension; before the probe-first rule the
       // same call ran 18 jobs (max-id scan and ranking on empty deltas)
-      assert(jobs.get() == 6, s"steady-state upsert ran ${jobs.get()} jobs")
+      assert(jobs == 6, s"steady-state upsert ran $jobs jobs")
       assert(dimDirs.map(fileStamps) == filesBefore)
     } finally cleaned.unpersist()
   }

@@ -45,4 +45,32 @@ class KpiSpec extends SparkTestBase {
     val trend = Kpi.fareTrend(wh)
     assert(trend.count() == wh.fact.select("departure_date_id").distinct().count())
   }
+
+  test("K-1..K-5 return identical rows at 1, 4 and 32 shuffle partitions") {
+    def all(): Seq[Seq[org.apache.spark.sql.Row]] =
+      Seq(Kpi.avgFareByAirline(wh), Kpi.bookingsByAirline(wh), Kpi.seasonalFares(wh),
+        Kpi.topRoutes(wh), Kpi.fareTrend(wh)).map(_.collect().toSeq)
+    wh.fact.count() // build the warehouse under the shipped conf
+    val keys = Seq("spark.sql.shuffle.partitions", "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = keys.map(k => k -> spark.conf.get(k))
+    try {
+      // no adaptive coalescing, so each count is the partition count the
+      // aggregates really run with
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      val results = Seq(1, 4, 32).map { n =>
+        spark.conf.set("spark.sql.shuffle.partitions", n.toString)
+        all()
+      }
+      assert(results.forall(_ == results.head))
+    } finally saved.foreach { case (k, v) => spark.conf.set(k, v) }
+  }
+
+  test("sorted KPIs run no range-partitioning jobs") {
+    wh.fact.count() // build the warehouse outside the counted window
+    // fact scan + aggregate map stage, result stage, plus the dim
+    // broadcast for K-1; a global orderBy cost 5 and 4 jobs (sampling
+    // job and range-exchange map stage)
+    assert(jobsIn(Kpi.avgFareByAirline(wh).collect()) == 3)
+    assert(jobsIn(Kpi.fareTrend(wh).collect()) == 2)
+  }
 }

@@ -198,20 +198,19 @@ class StreamingStarBuildSpec extends SparkTestBase {
     assert(Files.exists(Paths.get(s"$root/wh/_applied_batches/0"))) // healed
   }
 
-  test("every commit writes one parquet file per date: micro-batch and compaction") {
+  test("one parquet file per commit: micro-batch and compaction") {
     val root = tmpDir("sstar")
     val stagingDir = s"$root/staging"
     val wh = new StarWarehouse(spark, s"$root/wh")
-    def dateDirs(): Seq[java.io.File] =
-      new java.io.File(wh.factPath).listFiles().toSeq
-        .filter(b => b.isDirectory && b.getName.startsWith("ingest_batch="))
-        .flatMap(_.listFiles().toSeq.filter(_.isDirectory))
-    def assertOneFilePerDate(): Unit = {
-      val dirs = dateDirs()
+    def batchDirs(): Seq[java.io.File] =
+      new java.io.File(wh.factPath).listFiles().toSeq.filter(_.isDirectory)
+    def assertOneFilePerBatch(): Unit = {
+      val dirs = batchDirs()
       assert(dirs.nonEmpty)
       dirs.foreach { d =>
+        assert(!d.listFiles().exists(_.isDirectory), s"${d.getName} has subdirectories")
         val files = d.listFiles().map(_.getName).filter(_.endsWith(".parquet"))
-        assert(files.length == 1, s"${d.getParentFile.getName}/${d.getName}: ${files.toSeq}")
+        assert(files.length == 1, s"${d.getName}: ${files.toSeq}")
       }
     }
     // four staged files per batch, so several tasks hold rows of a date
@@ -220,12 +219,11 @@ class StreamingStarBuildSpec extends SparkTestBase {
       StreamingStarBuild.start(spark, stagingDir, s"$root/wh", s"$root/ckpt")
         .awaitTermination()
     }
-    assert(dateDirs().map(_.getParentFile.getName).toSet ==
-      Set("ingest_batch=0", "ingest_batch=1"))
-    assertOneFilePerDate()
+    assert(batchDirs().map(_.getName).toSet == Set("ingest_batch=0", "ingest_batch=1"))
+    assertOneFilePerBatch()
     wh.compactFact()
-    assert(dateDirs().map(_.getParentFile.getName).toSet == Set("ingest_batch=-1"))
-    assertOneFilePerDate()
+    assert(batchDirs().map(_.getName).toSet == Set("ingest_batch=-1"))
+    assertOneFilePerBatch()
     assert(wh.fact.count() == 94)
   }
 }
