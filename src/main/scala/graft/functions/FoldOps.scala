@@ -27,7 +27,9 @@ import org.apache.spark.sql.types._
   * fields — exactly `array_sort`'s default struct order on the
   * non-null arrays the `collect_list` inputs guarantee. Timestamp
   * fields compare as their epoch-µs longs, which IS TimestampType's
-  * ordering.
+  * ordering. A null field has no place in either recurrence, so a
+  * kernel that meets one throws an IllegalArgumentException naming
+  * the field rather than reading it as 0.
   */
 object FoldOpsUtil {
   /** Indices 0..n-1 sorted lexicographically by (k0, k1, k2). */
@@ -47,6 +49,23 @@ object FoldOpsUtil {
     idx
   }
 
+  private val walletFields = Array("ts", "event_id", "delta")
+  private val debounceFields = Array("tsm", "event_id")
+
+  /** Element `i`'s struct, checked to hold no null field. */
+  private def element(a: ArrayData, i: Int, kernel: String,
+      names: Array[String]): InternalRow = {
+    val r = a.getStruct(i, names.length)
+    var f = 0
+    while (f < names.length) {
+      if (r.isNullAt(f))
+        throw new IllegalArgumentException(
+          s"$kernel: element $i has a null `${names(f)}` field")
+      f += 1
+    }
+    r
+  }
+
   /** q147/q175's capped-balance recurrence over (ts, event_id, delta)
     * structs: bal' = max(bal + delta, 0), floors' += [bal + delta < 0].
     * Returns struct(bal, floors). */
@@ -57,7 +76,7 @@ object FoldOpsUtil {
     val dl = new Array[Long](n)
     var i = 0
     while (i < n) {
-      val r = a.getStruct(i, 3)
+      val r = element(a, i, "wallet_fold", walletFields)
       ts(i) = r.getLong(0); id(i) = r.getLong(1); dl(i) = r.getLong(2)
       i += 1
     }
@@ -84,7 +103,7 @@ object FoldOpsUtil {
     val id = new Array[Long](n)
     var i = 0
     while (i < n) {
-      val r = a.getStruct(i, 2)
+      val r = element(a, i, "debounce_fold", debounceFields)
       ts(i) = r.getLong(0); id(i) = r.getLong(1)
       i += 1
     }

@@ -544,7 +544,7 @@ object Assembly {
 
   val novelBigramRate: Q = (s, d) => {
     val docs = Tables.documents(s, d)
-    scoreNonTrain(docs, trainBigramStore(s, d).knownSet())
+    scoreNonTrain(docs, trainBigramStore(s, d).state())
   }
 
   // One stored train-bigram set per (JVM, corpus CONTENT) — round 0
@@ -1067,27 +1067,8 @@ object Assembly {
   * round — a small fixed fraction of corpus bytes — and eval scoring
   * left-joins it on the hash, id-only both sides. Steady state per
   * round: O(delta) to append, O(eval) to score. */
-class TrainBigramStore(spark: org.apache.spark.sql.SparkSession, val path: String)
-    extends CompactableRoundStore {
-
-  override protected def storeSpark: org.apache.spark.sql.SparkSession = spark
-  /** The set union is idempotent: the folded partition holds the
-    * distinct bigrams of the folded rounds. */
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    rows.select(col("bg")).distinct()
-
-  def exists: Boolean = graft.flights.StarWarehouse.pathExists(spark, path)
-
-  /** Standing per-round rows. */
-  def roundRows: DataFrame = readAll
-
-  /** The known-bigram set across committed rounds. `beforeRound`
-    * restricts to rounds strictly below it — the streaming replay
-    * guard (partition pruning makes the bound free). */
-  def knownSet(beforeRound: Option[Long] = None): DataFrame =
-    beforeRound.foldLeft(roundRows)((df, r) =>
-        df.filter(col("ingest_round") < r))
-      .select(col("bg")).distinct()
+class TrainBigramStore(spark: org.apache.spark.sql.SparkSession, path: String)
+    extends RoundStore(spark, path, RoundStore.setUnion(col("bg"))) {
 
   /** Index `docs`' TRAIN rows and commit their distinct bigram hashes
     * as ingest round `round` — idempotent under retry. */

@@ -337,31 +337,11 @@ object Boilerplate {
   * Scale: the artifact holds one (int64, int64) row per distinct
   * block per round — a small fixed fraction of corpus bytes — and the
   * delta cut reads it once, joined on the delta's own block hashes. */
-class BoilerplateStore(spark: org.apache.spark.sql.SparkSession, val path: String)
-    extends CompactableRoundStore {
-
-  override protected def storeSpark: org.apache.spark.sql.SparkSession = spark
-  /** Distinct-doc counts are additive across doc-disjoint rounds, so
-    * the folded partition holds their per-bhash sums — reads
-    * re-aggregate to identical totals. */
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    rows.groupBy(col("bhash")).agg(sum(col("n_docs")).as("n_docs"))
-
-  def exists: Boolean = graft.flights.StarWarehouse.pathExists(spark, path)
-
-  /** Standing per-round rows. */
-  def roundFreqs: DataFrame = readAll
-
-  /** Standing block frequencies summed across committed rounds.
-    * `beforeRound` restricts to rounds strictly below it — the
-    * streaming replay guard (a re-delivered micro-batch whose own
-    * round already landed must not count itself twice; partition
-    * pruning makes the bound free). */
-  def freqs(beforeRound: Option[Long] = None): DataFrame =
-    beforeRound.foldLeft(roundFreqs)((df, r) =>
-        df.filter(col("ingest_round") < r))
-      .groupBy(col("bhash"))
-      .agg(sum(col("n_docs")).as("n_docs"))
+class BoilerplateStore(spark: org.apache.spark.sql.SparkSession, path: String)
+    extends RoundStore(spark, path,
+      // distinct-doc counts are additive across doc-disjoint rounds
+      // (and >= 1, so the zero filter never fires)
+      RoundStore.signedSum(Seq("bhash"), Seq("n_docs"))) {
 
   /** Count `docs`' blocks and commit them as ingest round `round` —
     * idempotent under retry (partition overwrite). */
@@ -377,9 +357,8 @@ class BoilerplateStore(spark: org.apache.spark.sql.SparkSession, val path: Strin
                beforeRound: Option[Long] = None): DataFrame = {
     val withHash = Boilerplate.hashedBlockView(
       delta.select(col("doc_id"), col("text")))
-    val combined = freqs(beforeRound)
-      .unionByName(Boilerplate.blockFreqs(delta.select(col("doc_id"), col("text"))))
-      .groupBy(col("bhash")).agg(sum(col("n_docs")).as("n_docs"))
+    val combined = merge(state(beforeRound)
+      .unionByName(Boilerplate.blockFreqs(delta.select(col("doc_id"), col("text")))))
     Boilerplate.cutWithFreqs(withHash, combined, minDocs)
   }
 }

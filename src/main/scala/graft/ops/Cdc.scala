@@ -44,9 +44,9 @@ import org.apache.spark.sql.types._
   * each batch lands as one per-round partition of compacted changes
   * (idempotent dynamic overwrite keyed on the round — the streaming
   * replay contract), reads LWW-fold the rounds, and the inherited
-  * [[CompactableRoundStore]] machinery folds old rounds together —
-  * read-equivalent because LWW is exactly a [[CompactableRoundStore]]
-  * `mergeRounds` algebra. [[graft.streaming.StreamingCdc]] is the same
+  * [[RoundStore]] machinery folds old rounds together —
+  * read-equivalent because LWW is exactly a [[RoundStore]] `merge`
+  * algebra. [[graft.streaming.StreamingCdc]] is the same
   * store fed by `foreachBatch` (the 13th pipeline).
   */
 object Cdc {
@@ -163,11 +163,11 @@ object Cdc {
   * only a source violating its own declared lateness bound can
   * resurrect. Default None + None: tombstones retained forever (the
   * order-safe maximum). */
-class CdcSnapshotStore(spark: SparkSession, val path: String,
+class CdcSnapshotStore(spark: SparkSession, path: String,
                        key: Seq[String], ts: String, seq: String,
                        gcTombstonesOnCompact: Option[String] = None,
                        gcTombstoneLag: Option[String] = None)
-    extends CompactableRoundStore {
+    extends RoundStore(spark, path, Cdc.compact(_, key, ts, seq)) {
   // a lag without the GC flag would be silently inert (the fold over
   // None never evaluates the lag branch) — a half-configured GC fails
   // loudly instead of retaining tombstones forever behind the caller's
@@ -177,13 +177,8 @@ class CdcSnapshotStore(spark: SparkSession, val path: String,
       "the lag bounds WHEN a tombstone may be GC'd, but the op column is what " +
       "enables GC at all — set gcTombstonesOnCompact, or drop the lag")
 
-  override protected def storeSpark: SparkSession = spark
-
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    Cdc.compact(rows.drop("ingest_round"), key, ts, seq)
-
   override protected def compactRounds(rows: DataFrame): DataFrame =
-    gcTombstonesOnCompact.foldLeft(mergeRounds(rows)) { (snap, opCol) =>
+    gcTombstonesOnCompact.foldLeft(merge(rows)) { (snap, opCol) =>
       gcTombstoneLag match {
         case None => snap.filter(col(opCol) =!= "D")
         case Some(lag) =>
@@ -196,14 +191,6 @@ class CdcSnapshotStore(spark: SparkSession, val path: String,
             .drop("_gc_wm_ts")
       }
     }
-
-  def exists: Boolean = graft.flights.StarWarehouse.pathExists(spark, path)
-
-  /** The LWW state over committed rounds (tombstones included). */
-  def snapshot(beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(
-      beforeRound.foldLeft(readAll)((df, r) =>
-        df.filter(col("ingest_round") < r)))
 
   /** Compact `changes` and commit them as ingest round `round` —
     * idempotent per round (dynamic partition overwrite). */

@@ -1785,43 +1785,25 @@ object EventTime {
   * replaces its own partial write, the [[BoilerplateStore]]
   * discipline) and UNIONED across rounds at read time. Union is
   * register-wise max: associative and idempotent, so
-  * [[CompactableRoundStore]] compaction (fold old rounds into one
+  * [[RoundStore]] compaction (fold old rounds into one
   * partition) is estimate-invariant by construction, not just by
   * convention — HllStoreSpec pins it bit-identically.
   *
   * Scale: the artifact holds a few KB per (event_type, round); reads
   * never touch raw history. The q93 audit query unions the stored
   * sketches with the delta's own sketch — O(delta) + O(store). */
-class HllDistinctStore(spark: org.apache.spark.sql.SparkSession, val path: String)
-    extends CompactableRoundStore {
-  import org.apache.spark.sql.{functions => F, DataFrame, SaveMode}
-
-  override protected def storeSpark: org.apache.spark.sql.SparkSession = spark
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    rows.groupBy(F.col("event_type"))
-      .agg(F.hll_union_agg(F.col("sketch")).as("sketch"))
-
-  def exists: Boolean = graft.flights.StarWarehouse.pathExists(spark, path)
-
-  /** Standing per-round sketch rows. */
-  def roundSketches: DataFrame = readAll
-
-  /** Stored sketches unioned across committed rounds; `beforeRound`
-    * is the streaming replay guard (rounds >= it are excluded so a
-    * re-delivered micro-batch cannot count itself twice). */
-  def sketches(beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(
-      beforeRound.foldLeft(roundSketches)((df, r) =>
-        df.filter(F.col("ingest_round") < r)))
+class HllDistinctStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path,
+      _.groupBy(col("event_type")).agg(hll_union_agg(col("sketch")).as("sketch"))) {
 
   /** Sketch `events`' users and commit them as ingest round `round`. */
   def appendRound(events: DataFrame, round: Long): Unit =
     commitRound(
-      events.groupBy(F.col("event_type"))
-        .agg(F.hll_sketch_agg(F.col("user_id")).as("sketch")), round)
+      events.groupBy(col("event_type"))
+        .agg(hll_sketch_agg(col("user_id")).as("sketch")), round)
 
   /** Stored sketches unioned with a delta's own per-type sketches. */
   def mergedWith(deltaSketches: DataFrame,
                  beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(sketches(beforeRound).unionByName(deltaSketches))
+    merge(state(beforeRound).unionByName(deltaSketches))
 }

@@ -724,19 +724,10 @@ object Graphs {
   * idempotent and auto-compaction folds old ones via the same additive
   * algebra — the [[DistinctViewStore]] monoid discipline applied to a
   * graph's edge-support universe. */
-class CoPairStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
-  override protected def storeSpark: SparkSession = spark
-
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    rows.groupBy(col("part_a"), col("part_b"))
-      .agg(sum(col("n_ab")).as("n_ab"))
-
-  /** The merged pair-support table over committed rounds. */
-  def state(beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(
-      beforeRound.foldLeft(readAll)((df, r) =>
-        df.filter(col("ingest_round") < r)))
+class CoPairStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path,
+      // per-order pair counts are >= 1, so the zero filter never fires
+      RoundStore.signedSum(Seq("part_a", "part_b"), Seq("n_ab"))) {
 
   /** The merged support table RESTRICTED to `keys` (a (part_a, part_b)
     * frame, typically broadcast-hinted by the caller): the restriction
@@ -745,8 +736,8 @@ class CoPairStore(spark: SparkSession, val path: String)
     * crossing check — never aggregates the full support universe
     * (r16, guide §3.2). */
   def stateFor(keys: DataFrame): DataFrame =
-    mergeRounds(readAll.join(keys.select(col("part_a"), col("part_b")),
-      Seq("part_a", "part_b"), "left_semi"))
+    merge(rounds().join(keys.select(col("part_a"), col("part_b")),
+      Seq("part_a", "part_b"), "left_semi").drop("ingest_round"))
 
   /** Count `items`' order-local pairs and commit as round `round` —
     * rounds must be order-disjoint (counts are per-order, so an order
@@ -780,18 +771,9 @@ class CoPairStore(spark: SparkSession, val path: String)
   * one slim column folded by compaction; a deployment where even that
   * scan bites should front the exact check with a bloom prefilter
   * ([[BloomJoin]]) and fall through to this join only on a hit. */
-class OrderLedgerStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
-  override protected def storeSpark: SparkSession = spark
-
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    rows.select(col("l_orderkey").cast("long").as("l_orderkey")).distinct()
-
-  /** Orderkeys committed by rounds below `beforeRound`. */
-  def seen(beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(
-      beforeRound.foldLeft(readAll)((df, r) =>
-        df.filter(col("ingest_round") < r)))
+class OrderLedgerStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path,
+      RoundStore.setUnion(col("l_orderkey").cast("long").as("l_orderkey"))) {
 
   /** Fail loudly if `items` shares an orderkey with any round below
     * `round` (the order-disjointness violation), else commit `items`'
@@ -799,8 +781,8 @@ class OrderLedgerStore(spark: SparkSession, val path: String)
   def checkDisjointAndCommit(items: DataFrame, round: Long): Unit = {
     val orders = items.select(col("l_orderkey").cast("long").as("l_orderkey"))
       .distinct()
-    if (graft.flights.StarWarehouse.pathExists(spark, path)) {
-      val clash = orders.join(seen(beforeRound = Some(round)),
+    if (exists) {
+      val clash = orders.join(state(beforeRound = Some(round)),
         Seq("l_orderkey"), "left_semi").limit(5).collect()
       require(clash.isEmpty,
         s"order-disjointness violated: orderkeys ${clash.map(_.getLong(0)).mkString(", ")} " +

@@ -29,7 +29,7 @@ import org.apache.spark.sql.functions._
   * the soundness argument). The naive docProfile state (one min/max
   * cell per group, q205) keeps its append-only contract — it is the
   * cheap tier for immutable logs. The store rides
-  * [[CompactableRoundStore]]: one partial-state partition per ingest
+  * [[RoundStore]]: one partial-state partition per ingest
   * round, merge-on-read, auto-compaction folding old rounds —
   * read-equivalent because the merge is the aggregates' own
   * semilattice/monoid algebra. */
@@ -132,17 +132,6 @@ object MatView {
       .groupBy(col("event_type"), col("user_id"))
       .agg(count(lit(1)).as("n"))
 
-  /** Merge distinct-count partial states: counts add per (type, user);
-    * rows whose count annihilates to exactly zero are dropped (absent
-    * row ≡ 0 under addition, so the filter is read-equivalent — and it
-    * is what makes RETRACTION shrink the store instead of accreting
-    * tombstone rows). Associative + commutative ⇒ rounds merge in any
-    * order and compaction is read-equivalent. */
-  private[ops] def mergeDistinctState(states: DataFrame): DataFrame =
-    states.groupBy(col("event_type"), col("user_id"))
-      .agg(sum(col("n")).as("n"))
-      .filter(col("n") =!= 0L)
-
   /** The served view over a merged state: exact distinct users and
     * event totals per type. */
   private[ops] def distinctView(state: DataFrame): DataFrame =
@@ -213,11 +202,6 @@ object MatView {
         expr("cast(cast(value as decimal(18,2)) * 100 as bigint) div 1000 as band"))
       .groupBy(col("event_type"), col("band"))
       .agg(count(lit(1)).as("n"))
-
-  private[ops] def mergeBandState(states: DataFrame): DataFrame =
-    states.groupBy(col("event_type"), col("band"))
-      .agg(sum(col("n")).as("n"))
-      .filter(col("n") =!= 0L)
 
   /** The served view over a merged band state: per type, the exact
     * count plus the p50 and p90 BANDS — the first band whose cumulative
@@ -602,21 +586,8 @@ object MatView {
   * state partition per ingest round; reads merge-on-read; rounds are
   * idempotent (dynamic overwrite) and auto-compaction folds old ones
   * via the same merge algebra. */
-class MatViewStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
-  override protected def storeSpark: SparkSession = spark
-
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    MatView.mergeState(rows.drop("ingest_round"))
-
-  def exists: Boolean = graft.flights.StarWarehouse.pathExists(spark, path)
-
-  /** The merged view state over committed rounds (`beforeRound` is the
-    * streaming replay guard). */
-  def state(beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(
-      beforeRound.foldLeft(readAll)((df, r) =>
-        df.filter(col("ingest_round") < r)))
+class MatViewStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path, MatView.mergeState) {
 
   /** Aggregate `docs` into partial state and commit as round `round`. */
   def appendRound(docs: DataFrame, round: Long): Unit =
@@ -625,7 +596,7 @@ class MatViewStore(spark: SparkSession, val path: String)
   /** Stored state merged with an uncommitted delta's own state — the
     * read path of a refresh that has scanned only the delta. */
   def mergedWith(deltaDocs: DataFrame, beforeRound: Option[Long] = None): DataFrame =
-    MatView.mergeState(state(beforeRound).unionByName(MatView.aggState(deltaDocs)))
+    merge(state(beforeRound).unionByName(MatView.aggState(deltaDocs)))
 }
 
 /** Durable (event_type, user_id, n) state store for the exact
@@ -635,21 +606,9 @@ class MatViewStore(spark: SparkSession, val path: String)
   * ones via the same additive algebra. `negate = true` commits a
   * RETRACTION round — the delete path the HLL store (q93) cannot
   * offer, because addition has inverses and register-max does not. */
-class DistinctViewStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
-  override protected def storeSpark: SparkSession = spark
-
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    MatView.mergeDistinctState(rows.drop("ingest_round"))
-
-  def exists: Boolean = graft.flights.StarWarehouse.pathExists(spark, path)
-
-  /** The merged distinct-count state over committed rounds
-    * (`beforeRound` is the streaming replay guard). */
-  def state(beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(
-      beforeRound.foldLeft(readAll)((df, r) =>
-        df.filter(col("ingest_round") < r)))
+class DistinctViewStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path,
+      RoundStore.signedSum(Seq("event_type", "user_id"), Seq("n"))) {
 
   /** Aggregate `events` into partial state and commit as round
     * `round`; `negate` retracts the batch instead of adding it. */
@@ -672,8 +631,7 @@ class DistinctViewStore(spark: SparkSession, val path: String)
 
   /** Stored state merged with an uncommitted delta's own state. */
   def mergedWith(deltaEvents: DataFrame, beforeRound: Option[Long] = None): DataFrame =
-    MatView.mergeDistinctState(
-      state(beforeRound).unionByName(MatView.distinctState(deltaEvents)))
+    merge(state(beforeRound).unionByName(MatView.distinctState(deltaEvents)))
 }
 
 /** Durable (event_type, band, n) histogram store for the exact
@@ -681,23 +639,15 @@ class DistinctViewStore(spark: SparkSession, val path: String)
   * retractable round discipline applied to a quantized value domain —
   * counts add per band, exact-zero rows annihilate, compaction folds
   * by the same algebra. */
-class BandViewStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
-  override protected def storeSpark: SparkSession = spark
+class BandViewStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path,
+      RoundStore.signedSum(Seq("event_type", "band"), Seq("n"))) {
 
   /** The quantization width is baked into every stored band value, so
     * it is persisted and verified on open — mixing widths would merge
     * incomparable histograms silently (VERDICT r13 #3). */
   override protected def layoutMeta: Map[String, String] =
     Map("band_width_cents" -> "1000")
-
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    MatView.mergeBandState(rows.drop("ingest_round"))
-
-  def state(beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(
-      beforeRound.foldLeft(readAll)((df, r) =>
-        df.filter(col("ingest_round") < r)))
 
   /** Histogram `events` into banded partial state and commit as round
     * `round`; `negate` retracts the batch instead of adding it. */
@@ -708,8 +658,7 @@ class BandViewStore(spark: SparkSession, val path: String)
 
   /** Stored state merged with an uncommitted delta's own state. */
   def mergedWith(deltaEvents: DataFrame, beforeRound: Option[Long] = None): DataFrame =
-    MatView.mergeBandState(
-      state(beforeRound).unionByName(MatView.bandState(deltaEvents)))
+    merge(state(beforeRound).unionByName(MatView.bandState(deltaEvents)))
 }
 
 /** Durable (event_type, side, kind, value, n) k-deep extreme-buffer
@@ -733,9 +682,8 @@ class BandViewStore(spark: SparkSession, val path: String)
   * kept set and the group silently reads as empty while truncated
   * values are still live. Bounds therefore only widen; the rebuild is
   * the one honest reset. */
-class ExtremeBufferStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
-  override protected def storeSpark: SparkSession = spark
+class ExtremeBufferStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path, MatView.mergeExtremeState) {
 
   /** Depth is a compaction-time truncation bound; rounds written at
     * different depths merge soundly (bounds are per-round), but a
@@ -744,16 +692,8 @@ class ExtremeBufferStore(spark: SparkSession, val path: String)
   override protected def layoutMeta: Map[String, String] =
     Map("extreme_depth" -> MatView.extremeDepth.toString)
 
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    MatView.mergeExtremeState(rows.drop("ingest_round"))
-
   override protected def compactRounds(rows: DataFrame): DataFrame =
-    MatView.compactExtremeState(rows.drop("ingest_round"))
-
-  def state(beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(
-      beforeRound.foldLeft(readAll)((df, r) =>
-        df.filter(col("ingest_round") < r)))
+    MatView.compactExtremeState(rows)
 
   /** Buffer `events` into per-side extreme state and commit as round
     * `round`; `negate` retracts the batch instead of adding it. */
@@ -766,6 +706,5 @@ class ExtremeBufferStore(spark: SparkSession, val path: String)
 
   /** Stored state merged with an uncommitted delta's own state. */
   def mergedWith(deltaEvents: DataFrame, beforeRound: Option[Long] = None): DataFrame =
-    MatView.mergeExtremeState(
-      state(beforeRound).unionByName(MatView.extremeState(deltaEvents)))
+    merge(state(beforeRound).unionByName(MatView.extremeState(deltaEvents)))
 }

@@ -629,7 +629,7 @@ object Multimodal {
         Seq("band"), "left")
       .select(col("band"), coalesce(col("n_pairs"), lit(0L)).as("n_pairs"))
       .crossJoin(broadcast(delta.agg(count(lit(1)).as("n_delta_assets"))))
-      .crossJoin(broadcast(store.index.agg(count(lit(1)).as("n_corpus_assets"))))
+      .crossJoin(broadcast(store.rounds().agg(count(lit(1)).as("n_corpus_assets"))))
       .orderBy(col("band"))
   }
 
@@ -649,21 +649,12 @@ object Multimodal {
   * parquet artifact of `(doc_id, phash, ingest_round)` — 16 bytes per
   * image — appended once per ingest round with the same
   * dynamic-partition-overwrite idempotence as the other round stores
-  * and compactable through [[CompactableRoundStore]]. The delta pair
+  * and compactable through [[RoundStore]]. The delta pair
   * join reads it pre-bucketed on the delta's own chunk keys, so a
   * dedup round costs O(delta x bucket collisions), never O(corpus),
   * and the corpus never re-decodes a single image. */
-class PhashIndexStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
-
-  override protected def storeSpark: SparkSession = spark
-  /** Hash rows are doc-disjoint across rounds: folding is identity. */
-  override protected def mergeRounds(rows: DataFrame): DataFrame = rows
-
-  def exists: Boolean = graft.flights.StarWarehouse.pathExists(spark, path)
-
-  /** The standing (doc_id, phash) index across committed rounds. */
-  def index: DataFrame = readAll
+class PhashIndexStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path, RoundStore.appendOnly) {
 
   /** Commit `hashes` (doc_id, phash) as ingest round `round` —
     * idempotent under retry (partition overwrite). */
@@ -681,9 +672,7 @@ class PhashIndexStore(spark: SparkSession, val path: String)
       .select(col("chunk"), col("ckey"),
         col("doc_id").as("new_doc"), col("phash").as("ph_n"))
     val corpusIdx = Multimodal.phashChunkIndex(
-        beforeRound.foldLeft(index)((ix, r) =>
-          ix.filter(col("ingest_round") < r))
-          .select(col("doc_id"), col("phash")))
+        state(beforeRound).select(col("doc_id"), col("phash")))
       .select(col("chunk"), col("ckey"),
         col("doc_id").as("old_doc"), col("phash").as("ph_o"))
     deltaIdx.join(corpusIdx, Seq("chunk", "ckey"))

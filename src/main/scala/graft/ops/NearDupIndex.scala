@@ -26,18 +26,8 @@ import org.apache.spark.sql.functions._
   * content-disjoint by doc_id); not needed until round count rivals
   * file-listing cost.
   */
-class NearDupIndexStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
-
-  override protected def storeSpark: SparkSession = spark
-  /** Index rows are doc-disjoint across rounds, so folding rounds is
-    * the identity on content. */
-  override protected def mergeRounds(rows: DataFrame): DataFrame = rows
-
-  def exists: Boolean = graft.flights.StarWarehouse.pathExists(spark, path)
-
-  /** The standing index across all committed rounds. */
-  def index: DataFrame = readAll
+class NearDupIndexStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path, RoundStore.appendOnly) {
 
   /** Index `docs` (doc_id, text) and commit them as ingest round
     * `round` — idempotent under retry (partition overwrite). */
@@ -58,8 +48,7 @@ class NearDupIndexStore(spark: SparkSession, val path: String)
                       beforeRound: Option[Long] = None): DataFrame = {
     val deltaIdx = Dedup.fpShingleIndex(delta.select(col("doc_id"), col("text")))
       .select(col("fp"), col("doc_id").as("new_doc"), col("sh").as("sh_n"))
-    val corpusIdx = beforeRound.foldLeft(index)((ix, r) =>
-        ix.filter(col("ingest_round") < r))
+    val corpusIdx = state(beforeRound)
       .select(col("fp"), col("doc_id").as("old_doc"), col("sh").as("sh_o"))
     deltaIdx.join(corpusIdx, Seq("fp"))
       // defensive sort on the STORED side: rounds persisted before the

@@ -113,19 +113,6 @@ object PostingsIndex {
   private[graft] def statsOf(docs: DataFrame): DataFrame =
     signedStats(docs.select(lit(1L).as("sign"), col("text")))
 
-  /** Merge postings partial states: tf/dl sum per (term, doc); exact
-    * zeros annihilate; the bucket column is re-derived from the term
-    * (partition-dir reads type it narrow). Associative + commutative,
-    * so rounds merge in any order and compaction is read-equivalent. */
-  private[graft] def mergePostings(rows: DataFrame): DataFrame =
-    rows.groupBy(col("term"), col("doc_id"))
-      .agg(sum(col("tf")).as("tf"), sum(col("dl")).as("dl"))
-      // a fully-retracted posting nets to (0, 0) and annihilates; a
-      // (0, dl) row is a pending dl correction and must survive the
-      // fold (it completes against the round that carries the tf)
-      .filter(col("tf") =!= 0L || col("dl") =!= 0L)
-      .withColumn("term_bucket", bucketCol(col("term")))
-
   /** Merge stats rows: plain sums, one row out. */
   private[graft] def mergeStats(rows: DataFrame): DataFrame =
     rows.agg(coalesce(sum(col("n_docs")), lit(0L)).as("n_docs"),
@@ -471,10 +458,15 @@ object PostingsIndex {
   * (tf/dl sums per (term, doc), exact zeros dropped); rounds are
   * idempotent dynamic overwrites; inherited auto-compaction folds old
   * rounds via the same additive algebra, preserving the bucket layout
-  * ([[CompactableRoundStore.extraPartitionCols]]). */
-class PostingsStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
-  override protected def storeSpark: SparkSession = spark
+  * ([[RoundStore.extraPartitionCols]]). A fully-retracted posting nets
+  * to (0, 0) and annihilates; a (0, dl) row is a pending dl correction
+  * and survives the fold (it completes against the round that carries
+  * the tf). The bucket column is re-derived from the term, because
+  * partition-dir reads type it narrow. */
+class PostingsStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path,
+      RoundStore.signedSum(Seq("term", "doc_id"), Seq("tf", "dl"))
+        .andThen(_.withColumn("term_bucket", PostingsIndex.bucketCol(col("term"))))) {
   override protected def extraPartitionCols: Seq[String] = Seq("term_bucket")
 
   /** The bucket fan-out is baked into the partition layout AND into
@@ -485,32 +477,18 @@ class PostingsStore(spark: SparkSession, val path: String)
   override protected def layoutMeta: Map[String, String] =
     Map("term_buckets" -> PostingsIndex.termBuckets.toString)
 
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    PostingsIndex.mergePostings(rows.drop("ingest_round"))
-
-  def exists: Boolean = graft.flights.StarWarehouse.pathExists(spark, path)
-
-  /** The merged postings over committed rounds (`beforeRound` is the
-    * streaming replay guard). Full-index read — audits only; serving
-    * goes through [[stateForTerms]]. */
-  def state(beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(
-      beforeRound.foldLeft(readAll)((df, r) =>
-        df.filter(col("ingest_round") < r)))
-
   /** The merged postings of exactly `terms`: the bucket filter lands
     * on the PARTITION column with literal values (driver-computed
     * [[PostingsIndex.bucketOf]]), pruning before any byte is read, and
     * the term filter pushes into the pruned scans. Applied BELOW the
-    * merge — equivalent because the fold groups by (term, doc). */
+    * merge — equivalent because the fold groups by (term, doc). The
+    * full-index [[state]] is for audits only. */
   def stateForTerms(terms: Seq[String], beforeRound: Option[Long] = None): DataFrame = {
     val buckets = terms.map(t => PostingsIndex.bucketOf(t).toInt).distinct
-    val pruned = readAll
+    merge(rounds(beforeRound)
       .filter(col("term_bucket").isin(buckets: _*))
       .filter(col("term").isin(terms: _*))
-    mergeRounds(
-      beforeRound.foldLeft(pruned)((df, r) =>
-        df.filter(col("ingest_round") < r)))
+      .drop("ingest_round"))
   }
 
   /** Index `docs` and commit as round `round`; `negate` retracts the
@@ -530,17 +508,8 @@ class PostingsStore(spark: SparkSession, val path: String)
 
 /** Durable corpus-statistics store: ONE signed (n_docs, total_toks)
   * row per round; merge = plain sums. O(1) state. */
-class CorpusStatsStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
-  override protected def storeSpark: SparkSession = spark
-
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    PostingsIndex.mergeStats(rows.drop("ingest_round"))
-
-  def state(beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(
-      beforeRound.foldLeft(readAll)((df, r) =>
-        df.filter(col("ingest_round") < r)))
+class CorpusStatsStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path, PostingsIndex.mergeStats) {
 
   def appendRound(docs: DataFrame, round: Long, negate: Boolean = false): Unit =
     appendSignedRound(docs.select(col("doc_id"),

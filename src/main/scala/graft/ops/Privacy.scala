@@ -190,11 +190,6 @@ object Privacy {
       .groupBy(col("segment"), col("nation"), col("band"))
       .agg(count(lit(1)).as("n"))
 
-  private[ops] def mergeClassState(states: DataFrame): DataFrame =
-    states.groupBy(col("segment"), col("nation"), col("band"))
-      .agg(sum(col("n")).as("n"))
-      .filter(col("n") =!= 0L)
-
   /** The q203 ladder served from class-count state: every level
     * re-aggregates the |classes|-bounded state rows, never customers. */
   private[ops] def ladderView(state: DataFrame): DataFrame = {
@@ -906,9 +901,9 @@ object Privacy {
   * additive/retractable round discipline applied to quasi-identifier
   * equivalence classes — counts add per class, exact zeros annihilate,
   * compaction folds by the same algebra. */
-class ClassCountStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
-  override protected def storeSpark: SparkSession = spark
+class ClassCountStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path,
+      RoundStore.signedSum(Seq("segment", "nation", "band"), Seq("n"))) {
 
   /** The quasi-identifier schema and band quantization define what an
     * equivalence class IS — persisted and verified on open, so a
@@ -916,14 +911,6 @@ class ClassCountStore(spark: SparkSession, val path: String)
     * instead of merging incomparable classes (VERDICT r13 #3). */
   override protected def layoutMeta: Map[String, String] =
     Map("quasi" -> "segment:nation:band", "band_width_cents" -> "100000")
-
-  override protected def mergeRounds(rows: DataFrame): DataFrame =
-    Privacy.mergeClassState(rows.drop("ingest_round"))
-
-  def state(beforeRound: Option[Long] = None): DataFrame =
-    mergeRounds(
-      beforeRound.foldLeft(readAll)((df, r) =>
-        df.filter(col("ingest_round") < r)))
 
   /** Fold `cust` rows into class counts and commit as round `round`;
     * `negate` retracts the batch (the erasure path). */
@@ -950,6 +937,5 @@ class ClassCountStore(spark: SparkSession, val path: String)
 
   /** Stored state merged with an uncommitted delta's own state. */
   def mergedWith(deltaCust: DataFrame, beforeRound: Option[Long] = None): DataFrame =
-    Privacy.mergeClassState(
-      state(beforeRound).unionByName(Privacy.classState(deltaCust)))
+    merge(state(beforeRound).unionByName(Privacy.classState(deltaCust)))
 }

@@ -973,7 +973,7 @@ object Similarity {
     store.appendRound(emb.filter(col("vec_id") > wm)
       .select(col("vec_id"),
         pqEncode(col("embedding"), books, dim).as("code")), round = 1L)
-    val codes = Dedup.materializedSketch(store.index)
+    val codes = Dedup.materializedSketch(store.rounds())
     val perBlock = (0 until pqBlocks).map { b =>
       codes.select(lit(b).as("block"),
         shiftright(col("code"), 8 * b).bitwiseAND(lit(255L)).as("cid"))
@@ -1300,15 +1300,9 @@ object Similarity {
   * book source after creation — an encoder that retrained would
   * silently invalidate every stored code (PqIndexSpec pins byte-stable
   * books across rounds). */
-class PqIndexStore(spark: SparkSession, val path: String)
-    extends CompactableRoundStore {
+class PqIndexStore(spark: SparkSession, path: String)
+    extends RoundStore(spark, path, RoundStore.appendOnly) {
   import org.apache.spark.sql.functions.col
-
-  override protected def storeSpark: SparkSession = spark
-  override protected def mergeRounds(rows: DataFrame): DataFrame = rows
-
-  /** The standing (vec_id, code) index across committed rounds. */
-  def index: DataFrame = readAll
 
   def appendRound(codes: DataFrame, round: Long): Unit =
     commitRound(codes.select(col("vec_id"), col("code")), round)

@@ -329,8 +329,10 @@ object Stats {
     * arithmetic, boundary placement only moves which shard
     * contributes what (the rangeShards argument verbatim). At 100 TB
     * the reducer bound is |distinct values| / shards instead of
-    * |distinct values| per group. */
-  private def groupedCumCounts(hist: DataFrame, grp: String,
+    * |distinct values| per group. A null group is a group like any
+    * other (as in the window spelling), so both driver tables join
+    * on it null-safely. */
+  private[graft] def groupedCumCounts(hist: DataFrame, grp: String,
       value: String, cnt: String): DataFrame = {
     val spark = hist.sparkSession
     val ranged = graft.ops.Dedup.materializedSketch(
@@ -349,18 +351,19 @@ object Stats {
     acc.foreach { case (g, n) => totRows.add(org.apache.spark.sql.Row(g, n)) }
     val gType = hist.schema(grp).dataType
     val offDf = spark.createDataFrame(offRows, StructType(Seq(
-      StructField("_pid", IntegerType, nullable = false),
-      StructField(grp, gType, nullable = true),
+      StructField("_opid", IntegerType, nullable = false),
+      StructField("_ogrp", gType, nullable = true),
       StructField("_off", LongType, nullable = false))))
     val totDf = spark.createDataFrame(totRows, StructType(Seq(
-      StructField(grp, gType, nullable = true),
+      StructField("_tgrp", gType, nullable = true),
       StructField("n", LongType, nullable = false))))
     val w = Window.partitionBy(col("_pid"), col(grp)).orderBy(col(value))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    ranged.join(broadcast(offDf), Seq("_pid", grp))
+    ranged.join(broadcast(offDf),
+        col("_pid") === col("_opid") && col(grp) <=> col("_ogrp"))
       .withColumn("cum", col("_off") + sum(col(cnt)).over(w))
-      .join(broadcast(totDf), Seq(grp))
-      .drop("_pid", "_off")
+      .join(broadcast(totDf), col(grp) <=> col("_tgrp"))
+      .drop("_pid", "_opid", "_ogrp", "_off", "_tgrp")
   }
 
   /** q146 — skyline (Pareto front) of the price/quantity trade-off:

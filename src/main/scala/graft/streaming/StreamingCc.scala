@@ -55,7 +55,7 @@ object StreamingCc {
     * rounds — the read surface a census or dedup filter consumes. */
   def labels(spark: SparkSession, labelPath: String,
              beforeRound: Option[Long] = None): DataFrame =
-    labelStore(spark, labelPath).snapshot(beforeRound)
+    labelStore(spark, labelPath).state(beforeRound)
       .select(col("doc_id"), col("comp"))
 
   /** One micro-batch: advance both stores to round
@@ -87,7 +87,7 @@ object StreamingCc {
       Graphs.pairCounts(batch)) // two consumers: crossings + the round commit
     // crossings against the PRE-batch support state (replay guard)
     val prior =
-      if (graft.flights.StarWarehouse.pathExists(spark, pairPath))
+      if (pairStore.exists)
         pairStore.state(beforeRound = Some(round))
       else deltaCounts.limit(0)
     val newEdges = deltaCounts
@@ -98,8 +98,8 @@ object StreamingCc {
       .select(col("part_a").as("doc_a"), col("part_b").as("doc_b"))
     val lstore = labelStore(spark, labelPath)
     val base =
-      if (graft.flights.StarWarehouse.pathExists(spark, labelPath))
-        lstore.snapshot(beforeRound = Some(round))
+      if (lstore.exists)
+        lstore.state(beforeRound = Some(round))
           .select(col("doc_id"), col("comp").as("keeper"))
       else emptyLabels(spark)
     val labels = Graphs.incrementalLabels(base, newEdges)

@@ -21,7 +21,7 @@ import org.apache.spark.sql.types._
   * replayed batch REPLACES its own partition, and HLL union being
   * idempotent means even a reader racing the replay never sees an
   * estimate move backward), and a batch that wants "distinct as of
-  * before me" reads `sketches(beforeRound = Some(batchId))`. Store
+  * before me" reads `state(beforeRound = Some(batchId))`. Store
   * and checkpoint are one atom to delete together. */
 object StreamingDistinct {
 
@@ -54,7 +54,7 @@ object StreamingDistinct {
   /** The live read: distinct-user estimates per event type from the
     * stored sketches alone. */
   def estimates(spark: SparkSession, storePath: String): DataFrame =
-    new HllDistinctStore(spark, storePath).sketches()
+    new HllDistinctStore(spark, storePath).state()
       .select(col("event_type"),
         hll_sketch_estimate(col("sketch")).as("est_users"))
 }

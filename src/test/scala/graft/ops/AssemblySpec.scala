@@ -64,7 +64,7 @@ class AssemblySpec extends SparkTestBase {
       .select(Assembly.bigramHashOf(col("_bp")).as("bg"))
       .distinct().as[Long].collect().toSet
     assert(direct.nonEmpty, "fixture ids must land in the train split")
-    def known = store.knownSet().as[Long].collect().toSet
+    def known = store.state().as[Long].collect().toSet
     assert(known == direct, "summed round sets differ from the batch set")
     store.appendRound(r1, 1L) // re-delivered round
     assert(known == direct, "retried round corrupted the set")

@@ -71,7 +71,7 @@ class BoilerplateSpec extends SparkTestBase {
     val store = new BoilerplateStore(spark, path)
     store.appendRound(r0, 0L)
     store.appendRound(r1, 1L)
-    def freqMap = store.freqs().collect()
+    def freqMap = store.state().collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     val direct = Boilerplate.blockFreqs(r0.unionByName(r1)).collect()
       .map(r => r.getLong(0) -> r.getLong(1)).toMap

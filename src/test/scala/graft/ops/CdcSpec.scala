@@ -95,15 +95,15 @@ class CdcSpec extends SparkTestBase {
     store.appendRound(odd, round = 0L)
     store.appendRound(even, round = 1L)
     val expect = liveState(Cdc.compact(log, key, "ts", "event_id"))
-    assert(liveState(store.snapshot()) == expect)
+    assert(liveState(store.state()) == expect)
     // a re-delivered round replaces itself (dynamic overwrite)
     store.appendRound(even, round = 1L)
-    assert(liveState(store.snapshot()) == expect, "round replay changed the snapshot")
+    assert(liveState(store.state()) == expect, "round replay changed the snapshot")
     // more rounds push past the shrunk threshold -> auto-compaction;
     // reads must be identical before/after the fold
     (2L to 6L).foreach { r =>
       store.appendRound(even.limit(0), round = r)
-      assert(liveState(store.snapshot()) == expect,
+      assert(liveState(store.state()) == expect,
         s"snapshot drifted after round $r / compaction")
     }
     // the replay guard: rounds at/past beforeRound are excluded
@@ -111,7 +111,7 @@ class CdcSpec extends SparkTestBase {
       key, "ts", "event_id")
     fresh.appendRound(odd, round = 0L)
     fresh.appendRound(even, round = 1L)
-    assert(liveState(fresh.snapshot(beforeRound = Some(1L))) ==
+    assert(liveState(fresh.state(beforeRound = Some(1L))) ==
       liveState(Cdc.compact(odd, key, "ts", "event_id")))
   }
 
@@ -124,26 +124,26 @@ class CdcSpec extends SparkTestBase {
     val keep = new CdcSnapshotStore(spark, tmpDir("cdc-gc") + "/keep",
       key, "ts", "event_id")
     waves.zipWithIndex.foreach { case (w, r) => keep.appendRound(w, r.toLong) }
-    val tombstonesBefore = keep.snapshot().filter(col("op") === "D").count()
+    val tombstonesBefore = keep.state().filter(col("op") === "D").count()
     assert(tombstonesBefore > 0L, "fixture should produce delete tombstones")
     keep.compact(upTo = 3L)
-    assert(keep.snapshot().filter(col("op") === "D").count() == tombstonesBefore,
+    assert(keep.state().filter(col("op") === "D").count() == tombstonesBefore,
       "default compaction must retain tombstones")
 
     // opt-in GC: compaction physically drops them; live rows unchanged
     val gc = new CdcSnapshotStore(spark, tmpDir("cdc-gc") + "/gc",
       key, "ts", "event_id", gcTombstonesOnCompact = Some("op"))
     waves.zipWithIndex.foreach { case (w, r) => gc.appendRound(w, r.toLong) }
-    val liveBefore = liveState(gc.snapshot())
+    val liveBefore = liveState(gc.state())
     gc.compact(upTo = 3L)
-    assert(gc.snapshot().filter(col("op") === "D").count() == 0L,
+    assert(gc.state().filter(col("op") === "D").count() == 0L,
       "GC compaction left tombstone rows")
-    assert(liveState(gc.snapshot()) == liveBefore,
+    assert(liveState(gc.state()) == liveBefore,
       "GC compaction changed the live rows")
     // physically gone from the store's files too, not just the fold
     assert(spark.read.parquet(gc.path).filter(col("op") === "D").count() == 0L,
       "tombstones survive in the compacted files")
-    assert(gc.snapshot().count() == liveBefore.size.toLong,
+    assert(gc.state().count() == liveBefore.size.toLong,
       "post-GC snapshot should hold exactly the live rows")
     // a post-GC upsert re-creates a GC'd key as a new row (CDC
     // re-registration semantics, not a resurrection bug)
@@ -154,7 +154,7 @@ class CdcSpec extends SparkTestBase {
       .withColumn("event_id", lit(999999999L))
       .withColumn("ts", lit(java.sql.Timestamp.valueOf("2031-01-01 00:00:00")))
     gc.appendRound(rebirth, round = 4L)
-    assert(liveState(gc.snapshot()).exists(_._1 == gone),
+    assert(liveState(gc.state()).exists(_._1 == gone),
       "a re-registered key should surface as live after GC")
   }
 
@@ -168,21 +168,21 @@ class CdcSpec extends SparkTestBase {
       gcTombstonesOnCompact = Some("op"),
       gcTombstoneLag = Some("INTERVAL 100 YEARS"))
     (0L to 3L).foreach(r => wide.appendRound(log.filter(col("event_id") % 4 === r), r))
-    val tombstones = wide.snapshot().filter(col("op") === "D").count()
+    val tombstones = wide.state().filter(col("op") === "D").count()
     assert(tombstones > 0L, "fixture should produce delete tombstones")
     wide.compact(upTo = 3L)
-    assert(wide.snapshot().filter(col("op") === "D").count() == tombstones,
+    assert(wide.state().filter(col("op") === "D").count() == tombstones,
       "an in-lag tombstone was GC'd — the event-time watermark guard is broken")
     // the ADVICE r13 resurrection case, under the guard: an upsert
     // OLDER in event time than the tombstone, arriving in a NEW round
     // after compaction, must still be masked (the retained tombstone
     // out-versions it)
-    val gone = wide.snapshot().filter(col("op") === "D")
+    val gone = wide.state().filter(col("op") === "D")
       .select("user_id").as[Long].head()
     val stale = log.filter(col("user_id") === gone && col("op") === "U")
       .orderBy(col("ts"), col("event_id")).limit(1)
     wide.appendRound(stale, round = 4L)
-    assert(!liveState(wide.snapshot()).exists(_._1 == gone),
+    assert(!liveState(wide.state()).exists(_._1 == gone),
       "an event-time-late upsert resurrected a key whose in-lag tombstone was retained")
 
     // zero lag: the watermark excludes every tombstone strictly below
@@ -193,11 +193,11 @@ class CdcSpec extends SparkTestBase {
       gcTombstonesOnCompact = Some("op"),
       gcTombstoneLag = Some("INTERVAL 0 SECONDS"))
     (0L to 3L).foreach(r => zero.appendRound(log.filter(col("event_id") % 4 === r), r))
-    val maxTs = zero.snapshot().agg(max(col("ts"))).head().getTimestamp(0)
-    val atWm = zero.snapshot()
+    val maxTs = zero.state().agg(max(col("ts"))).head().getTimestamp(0)
+    val atWm = zero.state()
       .filter(col("op") === "D" && col("ts") === maxTs).count()
     zero.compact(upTo = 3L)
-    assert(zero.snapshot().filter(col("op") === "D").count() == atWm,
+    assert(zero.state().filter(col("op") === "D").count() == atWm,
       "zero-lag GC should drop every tombstone below the event-time watermark")
   }
   test("a half-configured tombstone GC (lag without the op column) fails loudly") {

@@ -29,12 +29,12 @@ class EmptyInputSpec extends SparkTestBase {
     val path = tmpDir("empty-ndi") + "/store"
     val store = new NearDupIndexStore(spark, path)
     store.appendRound(emptyDocs, 0L)
-    assert(store.index.count() === 0)
+    assert(store.rounds().count() === 0)
     // and a later real round reads back merged with the empty one
     store.appendRound(Seq((1L, "alpha beta gamma delta epsilon zeta"))
       .toDF("doc_id", "text"), 1L)
-    assert(store.index.filter(col("ingest_round") === 1L).count() > 0)
-    assert(store.index.filter(col("ingest_round") === 0L).count() === 0)
+    assert(store.rounds().filter(col("ingest_round") === 1L).count() > 0)
+    assert(store.rounds().filter(col("ingest_round") === 0L).count() === 0)
   }
 
   test("an empty round commits a schema-bearing partition (typed readback)") {

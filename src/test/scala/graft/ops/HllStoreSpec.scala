@@ -42,7 +42,7 @@ class HllStoreSpec extends SparkTestBase {
       r0.unionByName(r1).unionByName(r2)
         .groupBy(col("event_type"))
         .agg(hll_sketch_agg(col("user_id")).as("sketch")))
-    assert(estimates(store.sketches()) == oneShot,
+    assert(estimates(store.state()) == oneShot,
       "round-wise union must be indistinguishable from one-shot build")
   }
 
@@ -50,20 +50,20 @@ class HllStoreSpec extends SparkTestBase {
     val path = tmpDir("hll-compact") + "/sketches"
     val store = new HllDistinctStore(spark, path)
     store.appendRound(r0, 0L); store.appendRound(r1, 1L); store.appendRound(r2, 2L)
-    val before = estimates(store.sketches())
+    val before = estimates(store.state())
     store.compact(1L)
     assert(partitions(path) == Set(1L, 2L))
-    assert(estimates(store.sketches()) == before)
+    assert(estimates(store.state()) == before)
     store.compact(2L)
     assert(partitions(path) == Set(2L))
-    assert(estimates(store.sketches()) == before)
+    assert(estimates(store.state()) == before)
   }
 
   test("beforeRound replay guard excludes a re-delivered round") {
     val path = tmpDir("hll-replay") + "/sketches"
     val store = new HllDistinctStore(spark, path)
     store.appendRound(r0, 0L); store.appendRound(r1, 1L)
-    val upTo0 = estimates(store.sketches(beforeRound = Some(1L)))
+    val upTo0 = estimates(store.state(beforeRound = Some(1L)))
     val only0 = estimates(
       r0.groupBy(col("event_type")).agg(hll_sketch_agg(col("user_id")).as("sketch")))
     assert(upTo0 == only0, "beforeRound=1 must see exactly round 0")

@@ -18,11 +18,11 @@ class NearDupIndexSpec extends SparkTestBase {
       4L -> "seven eight nine ten eleven twelve")
     store.appendRound(a, 0L)
     store.appendRound(b, 1L)
-    assert(store.index.count() == 4)
+    assert(store.rounds().count() == 4)
     // a crashed-and-retried round REPLACES its partition, never doubles
     store.appendRound(b, 1L)
-    assert(store.index.count() == 4)
-    assert(store.index.select("ingest_round").distinct().as[Long].collect().toSet
+    assert(store.rounds().count() == 4)
+    assert(store.rounds().select("ingest_round").distinct().as[Long].collect().toSet
       == Set(0L, 1L))
   }
 

@@ -41,7 +41,7 @@ class PqIndexSpec extends SparkTestBase {
     val (ck, _) = ScratchStores.corpusKey(graft.Tables.documents(spark, dir), dir)
     val path = ScratchStores.pathFor(ck, "graft-pq-index")(_ => ())
     val store = new PqIndexStore(spark, path)
-    val idx = store.index.collect()
+    val idx = store.rounds().collect()
     assert(idx.length == nCorpus)
     assert(idx.map(_.getAs[Long]("vec_id")).distinct.length == nCorpus,
       "a vector must carry exactly one code row")
@@ -55,7 +55,7 @@ class PqIndexSpec extends SparkTestBase {
       books2.map(_.map(_.toSeq).toSeq).toSeq, "codebooks must never retrain")
     assert(out.map(_.toSeq).toSeq == out2.map(_.toSeq).toSeq,
       "re-run must be byte-identical (idempotent round commit)")
-    assert(store.index.count() == nCorpus, "re-append duplicated code rows")
+    assert(store.rounds().count() == nCorpus, "re-append duplicated code rows")
 
     // the delta's stored codes really come from the FROZEN books: a
     // driver-side re-encode of one delta vector with readBooks() must
@@ -74,7 +74,7 @@ class PqIndexSpec extends SparkTestBase {
       }._2
       cid.toLong << (8 * b)
     }.sum
-    val gotCode = store.index.filter(col("vec_id") === vid)
+    val gotCode = store.rounds().filter(col("vec_id") === vid)
       .collect().head.getAs[Long]("code")
     assert(gotCode == wantCode,
       s"stored code $gotCode != frozen-book re-encode $wantCode")

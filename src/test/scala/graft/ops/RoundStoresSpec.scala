@@ -30,7 +30,7 @@ class RoundStoresSpec extends SparkTestBase {
     val path = tmpDir("compact-boiler") + "/freqs"
     val store = new BoilerplateStore(spark, path)
     store.appendRound(r0, 0L); store.appendRound(r1, 1L); store.appendRound(r2, 2L)
-    def freqMap = store.freqs().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def freqMap = store.state().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val before = freqMap
     store.compact(1L)
     assert(partitions(path) == Set(1L, 2L), "rounds <= 1 not folded into partition 1")
@@ -52,7 +52,7 @@ class RoundStoresSpec extends SparkTestBase {
     val path = tmpDir("compact-ndidx") + "/index"
     val store = new NearDupIndexStore(spark, path)
     store.appendRound(r0, 0L); store.appendRound(r1, 1L); store.appendRound(r2, 2L)
-    def rows = store.index.drop("ingest_round").collect()
+    def rows = store.rounds().drop("ingest_round").collect()
       .map(_.toSeq.map(String.valueOf)).sortBy(_.mkString("|")).toSeq
     val before = rows
     store.compact(1L)
@@ -71,7 +71,7 @@ class RoundStoresSpec extends SparkTestBase {
     // ids chosen in the train split (see AssemblySpec fixture)
     store.appendRound(Seq((8L, "alpha beta gamma")).toDF("doc_id", "text"), 0L)
     store.appendRound(Seq((16L, "beta gamma delta")).toDF("doc_id", "text"), 1L)
-    def known = store.knownSet().as[Long].collect().toSet
+    def known = store.state().as[Long].collect().toSet
     val before = known
     assert(before.nonEmpty)
     store.compact(1L)
@@ -86,7 +86,7 @@ class RoundStoresSpec extends SparkTestBase {
       override protected def autoCompactThreshold: Int = n
     }
     // the default cadence is wired through the shared trait constant
-    assert(CompactableRoundStore.autoCompactRounds == 8)
+    assert(RoundStore.autoCompactRounds == 8)
     var expected = Map.empty[Long, Long] // bhash -> summed n_docs across rounds
     var folded = 0
     for (r <- 0L until (3 * n).toLong) {
@@ -106,7 +106,7 @@ class RoundStoresSpec extends SparkTestBase {
       // partition count never outgrows threshold + current round + 1 landing
       assert(after.size <= n + 2, s"round $r: ${after.size} partitions — cadence not firing")
       // reads identical across every append AND every fold
-      val got = store.freqs().collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
+      val got = store.state().collect().map(x => x.getLong(0) -> x.getLong(1)).toMap
       assert(got == expected, s"round $r: auto-fold changed the summed counts")
     }
     assert(folded >= 2, s"expected at least two auto-folds over ${3 * n} rounds, saw $folded")
@@ -118,7 +118,7 @@ class RoundStoresSpec extends SparkTestBase {
     val store = new HllDistinctStore(spark, path) {
       override protected def autoCompactThreshold: Int = 2
     }
-    def est = store.sketches().select(col("event_type"),
+    def est = store.state().select(col("event_type"),
         hll_sketch_estimate(col("sketch")).as("e"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     for (r <- 0L until 6L) {
@@ -136,12 +136,12 @@ class RoundStoresSpec extends SparkTestBase {
     val path = tmpDir("compact-crash") + "/freqs"
     val store = new BoilerplateStore(spark, path)
     store.appendRound(r0, 0L); store.appendRound(r1, 1L); store.appendRound(r2, 2L)
-    def freqMap = store.freqs().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    def freqMap = store.state().collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val before = freqMap
     // simulate the compact(1) crash window between steps 3 and 4:
     // staged artifact + marker committed, one folded partition already
     // deleted, the merged partition not yet rewritten
-    store.roundFreqs.filter(col("ingest_round") <= 1L).drop("ingest_round")
+    store.rounds().filter(col("ingest_round") <= 1L).drop("ingest_round")
       .groupBy(col("bhash")).agg(sum(col("n_docs")).as("n_docs"))
       .withColumn("ingest_round", lit(1L))
       .write.mode("overwrite").parquet(s"$path.compact")
@@ -194,7 +194,7 @@ class RoundStoresSpec extends SparkTestBase {
     // a pre-metadata store (file deleted to simulate) is ADOPTED: the
     // current constants become its recorded contract on next touch
     fs.delete(new org.apache.hadoop.fs.Path(s"$path.layout"), false)
-    CompactableRoundStore.verifiedLayouts.clear()
+    RoundStore.verifiedLayouts.clear()
     assert(st.state().count() > 0L)
     assert(fs.exists(new org.apache.hadoop.fs.Path(s"$path.layout")),
       "pre-metadata store not adopted on read")
@@ -244,5 +244,122 @@ class RoundStoresSpec extends SparkTestBase {
     assert(RoundMarker.read(spark, legacy).contains(9L))
     RoundMarker.commitMarker(spark, legacy, 2L)
     assert(RoundMarker.read(spark, legacy).contains(9L))
+  }
+
+  /** One row per store kind, for the contract every store shares. */
+  private case class Case[S <: RoundStore](name: String, make: String => S,
+      cadence: String => S, append: (S, Long) => Unit,
+      view: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = identity)
+
+  private trait Cadence1 extends RoundStore {
+    override protected def autoCompactThreshold: Int = 1
+  }
+
+  private def docs(r: Long) = Seq(
+    (r * 10 + 1, "alpha beta gamma delta epsilon zeta eta theta"),
+    (r * 10 + 2, s"round $r words appearing nowhere else at all"),
+    (r * 10 + 3, s"alpha beta gamma and round $r"),
+    (r * 10 + 4, "totally different words in this one right here now"))
+    .toDF("doc_id", "text")
+  // events whose round 2 retracts part of round 0 (signed stores)
+  private def events(r: Long) =
+    Seq.tabulate(6)(i => (r * 6 + i, Seq("view", "click")(i % 2), 10L + i % 3 + r % 2,
+      1.25 * (i + 1) + r)).toDF("event_id", "event_type", "user_id", "value")
+  private def signedEvents(r: Long) =
+    if (r < 2) events(r).withColumn("sign", lit(1L))
+    else events(0).limit(2).withColumn("sign", lit(-1L))
+      .unionByName(events(2).withColumn("sign", lit(1L)))
+
+  private val cases: Seq[Case[_ <: RoundStore]] = Seq(
+    Case[NearDupIndexStore]("NearDupIndexStore", new NearDupIndexStore(spark, _),
+      new NearDupIndexStore(spark, _) with Cadence1, (s, r) => s.appendRound(docs(r), r)),
+    Case[PhashIndexStore]("PhashIndexStore", new PhashIndexStore(spark, _),
+      new PhashIndexStore(spark, _) with Cadence1, (s, r) => s.appendRound(
+        Seq((r * 10 + 1, r * 0x1111L), (r * 10 + 2, ~r)).toDF("doc_id", "phash"), r)),
+    Case[PqIndexStore]("PqIndexStore", new PqIndexStore(spark, _),
+      new PqIndexStore(spark, _) with Cadence1, (s, r) => s.appendRound(
+        Seq((r * 10 + 1, r * 7L), (r * 10 + 2, r * 7L + 1)).toDF("vec_id", "code"), r)),
+    Case[TrainBigramStore]("TrainBigramStore", new TrainBigramStore(spark, _),
+      new TrainBigramStore(spark, _) with Cadence1, (s, r) => s.appendRound(docs(r), r)),
+    Case[OrderLedgerStore]("OrderLedgerStore", new OrderLedgerStore(spark, _),
+      new OrderLedgerStore(spark, _) with Cadence1, (s, r) => s.checkDisjointAndCommit(
+        Seq((r * 10 + 1).toInt, (r * 10 + 2).toInt).toDF("l_orderkey"), r)),
+    Case[BoilerplateStore]("BoilerplateStore", new BoilerplateStore(spark, _),
+      new BoilerplateStore(spark, _) with Cadence1, (s, r) => s.appendRound(docs(r), r)),
+    Case[CoPairStore]("CoPairStore", new CoPairStore(spark, _),
+      new CoPairStore(spark, _) with Cadence1, (s, r) => s.appendRound(
+        Seq((r * 10 + 1, 1L), (r * 10 + 1, 2L), (r * 10 + 1, 3L + r), (r * 10 + 2, 1L),
+          (r * 10 + 2, 2L)).toDF("l_orderkey", "l_partkey"), r)),
+    Case[DistinctViewStore]("DistinctViewStore", new DistinctViewStore(spark, _),
+      new DistinctViewStore(spark, _) with Cadence1,
+      (s, r) => s.appendSignedRound(signedEvents(r), r)),
+    Case[BandViewStore]("BandViewStore", new BandViewStore(spark, _),
+      new BandViewStore(spark, _) with Cadence1,
+      (s, r) => s.appendRound(if (r < 2) events(r) else events(0).limit(2), r,
+        negate = r == 2)),
+    Case[ClassCountStore]("ClassCountStore", new ClassCountStore(spark, _),
+      new ClassCountStore(spark, _) with Cadence1, (s, r) => s.appendSignedRound(
+        signedEvents(r).select(col("event_type").as("c_mktsegment"),
+          col("user_id").as("c_nationkey"), (col("value") * 1000).as("c_acctbal"),
+          col("sign")), r)),
+    Case[PostingsStore]("PostingsStore", new PostingsStore(spark, _),
+      new PostingsStore(spark, _) with Cadence1, (s, r) =>
+        if (r < 2) s.appendRound(docs(r), r)
+        else s.appendSignedRound(docs(0).limit(1).select(col("doc_id"), lit(-1L).as("sign"),
+          col("text")).unionByName(docs(2).select(col("doc_id"), lit(1L).as("sign"),
+          col("text"))), r)),
+    Case[CorpusStatsStore]("CorpusStatsStore", new CorpusStatsStore(spark, _),
+      new CorpusStatsStore(spark, _) with Cadence1, (s, r) => s.appendRound(docs(r), r,
+        negate = r == 2)),
+    Case[MatViewStore]("MatViewStore", new MatViewStore(spark, _),
+      new MatViewStore(spark, _) with Cadence1, (s, r) => s.appendRound(
+        events(r).select(col("event_type").as("source"), (col("user_id") % 2).as("lang"),
+          col("event_id").as("n_chars")), r)),
+    Case[ExtremeBufferStore]("ExtremeBufferStore", new ExtremeBufferStore(spark, _),
+      new ExtremeBufferStore(spark, _) with Cadence1,
+      (s, r) => s.appendSignedRound(signedEvents(r), r)),
+    Case[HllDistinctStore]("HllDistinctStore", new HllDistinctStore(spark, _),
+      new HllDistinctStore(spark, _) with Cadence1, (s, r) => s.appendRound(events(r), r),
+      view = _.select(col("event_type"), hll_sketch_estimate(col("sketch")).as("est"))),
+    Case[CdcSnapshotStore]("CdcSnapshotStore",
+      new CdcSnapshotStore(spark, _, Seq("k"), "ts", "seq"),
+      new CdcSnapshotStore(spark, _, Seq("k"), "ts", "seq") with Cadence1,
+      (s, r) => s.appendRound(Seq.tabulate(4)(i => (i % 3L, r * 10 + i, r * 10 + i,
+        if (r == 2 && i == 3) "D" else "U", s"v$r.$i")).toDF("k", "ts", "seq", "op", "v"), r)))
+
+  test("the table covers every round store kind") {
+    assert(cases.map(_.name).distinct.size == 16)
+  }
+
+  for (c <- cases) test(s"${c.name}: state() survives compaction and the cadence fold; " +
+      "state(Some(r)) is the merge of rounds < r") {
+    def run[S <: RoundStore](c: Case[S]): Unit = {
+      def rows(df: org.apache.spark.sql.DataFrame): Seq[String] =
+        c.view(df).collect().toSeq.map(_.toSeq.map {
+          case b: Array[Byte] => b.mkString(",")
+          case x => String.valueOf(x)
+        }.mkString("|")).sorted
+      val full = c.make(tmpDir("rs-" + c.name) + "/store")
+      val inc = c.cadence(tmpDir("rs-cadence-" + c.name) + "/store")
+      // after round r the cadence store holds exactly rounds <= r, so
+      // its state is the merge of those rounds
+      val upTo = (0L to 2L).map { r =>
+        c.append(full, r)
+        c.append(inc, r)
+        rows(inc.state())
+      }
+      assert(partitions(inc.path) == Set(1L, 2L), "threshold 1 did not fold rounds 0 and 1")
+      for (r <- 1L to 2L)
+        assert(rows(full.state(Some(r))) == upTo((r - 1).toInt),
+          s"state(Some($r)) is not the merge of rounds < $r")
+      val before = rows(full.state())
+      assert(before.nonEmpty, "vacuous case: empty state")
+      assert(upTo(2) == before, "the cadence fold changed state()")
+      full.compact(2L)
+      assert(partitions(full.path) == Set(2L))
+      assert(rows(full.state()) == before, "compact(2) changed state()")
+      assert(rows(full.state(Some(3L))) == before)
+    }
+    run(c)
   }
 }

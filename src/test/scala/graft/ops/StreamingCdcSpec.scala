@@ -30,19 +30,19 @@ class StreamingCdcSpec extends SparkTestBase {
     StreamingCdc.start(spark, logDir, storePath, s"$root/ckpt").awaitTermination()
 
     val store = new CdcSnapshotStore(spark, storePath, StreamingCdc.key, "ts", "event_id")
-    val streamed = Cdc.live(store.snapshot())
+    val streamed = Cdc.live(store.state())
       .select(col("user_id"), col("cents"), col("event_id"))
       .as[(Long, Long, Long)].collect().toSet
     assert(streamed == batchLive, "streamed snapshot diverged from the batch fold")
 
     // at-least-once: re-deliver batch 0 by hand — round replaced, not duplicated
     StreamingCdc.processBatch(log.filter(col("event_id") % 2 === 0), batchId = 0L, storePath)
-    val replayed = Cdc.live(store.snapshot())
+    val replayed = Cdc.live(store.state())
       .select(col("user_id"), col("cents"), col("event_id"))
       .as[(Long, Long, Long)].collect().toSet
     assert(replayed == batchLive, "redelivery changed the snapshot")
     // exactly one surviving row per key in the folded state
-    val snap = store.snapshot()
+    val snap = store.state()
     assert(snap.groupBy("user_id").count().filter(col("count") > 1).isEmpty)
   }
 }

@@ -34,7 +34,7 @@ class StreamingPqSpec extends SparkTestBase {
     val batchPath = ScratchStores.pathFor(key, "graft-pq-index")(_ => ())
     val batchStore = new PqIndexStore(spark, batchPath)
     val books = batchStore.readBooks()
-    val batchIdx = batchStore.index.select(col("vec_id"), col("code"))
+    val batchIdx = batchStore.rounds().select(col("vec_id"), col("code"))
       .as[(Long, Long)].collect().toSet
 
     // the STREAMING index: SAME frozen books + same base round; the
@@ -64,12 +64,12 @@ class StreamingPqSpec extends SparkTestBase {
       "books changed after the second streamed batch — the freeze is broken")
 
     // parity: the streamed index holds exactly the batch build's codes
-    val streamIdx = store.index.select(col("vec_id"), col("code"))
+    val streamIdx = store.rounds().select(col("vec_id"), col("code"))
       .as[(Long, Long)].collect().toSet
     assert(streamIdx == batchIdx,
       "streamed index diverged from the q31e batch build")
     // and the delta really landed as two streamed rounds after base 0
-    val rounds = store.index.select(col("ingest_round"))
+    val rounds = store.rounds().select(col("ingest_round"))
       .distinct().as[Long].collect().toSet
     assert(rounds == Set(0L, 1L, 2L), s"unexpected round layout: $rounds")
   }
@@ -88,15 +88,15 @@ class StreamingPqSpec extends SparkTestBase {
       Similarity.pqEncode(col("embedding"), books, dim).as("code")), round = 0L)
     val delta = emb.filter(col("vec_id") >= 100 && col("vec_id") < 150)
     StreamingPq.processBatch(delta, batchId = 0L, storePath)
-    val once = store.index.select(col("vec_id"), col("code"), col("ingest_round"))
+    val once = store.rounds().select(col("vec_id"), col("code"), col("ingest_round"))
       .as[(Long, Long, Long)].collect().toSet
     // foreachBatch is at-least-once: the SAME batchId arrives again
     // after its round already landed — the commit must replace itself
     StreamingPq.processBatch(delta, batchId = 0L, storePath)
-    val twice = store.index.select(col("vec_id"), col("code"), col("ingest_round"))
+    val twice = store.rounds().select(col("vec_id"), col("code"), col("ingest_round"))
       .as[(Long, Long, Long)].collect().toSet
     assert(twice == once, "replay changed the index")
-    assert(store.index.count() == 150, "replay duplicated code rows")
+    assert(store.rounds().count() == 150, "replay duplicated code rows")
   }
 
   test("a wrong-width streamed vector fails the batch loudly, committing nothing (ADVICE r11)") {
@@ -112,7 +112,7 @@ class StreamingPqSpec extends SparkTestBase {
     store.writeBooks(books)
     store.appendRound(emb.select(col("vec_id"),
       Similarity.pqEncode(col("embedding"), books, dim).as("code")), round = 0L)
-    val before = store.index.count()
+    val before = store.rounds().count()
     // PqEncode's dim-based offsets would zero-pad this 9-wide vector
     // into a syntactically valid but garbage code — the stream must
     // reject it before it freezes into the index
@@ -123,7 +123,7 @@ class StreamingPqSpec extends SparkTestBase {
     val chain = Iterator.iterate(e: Throwable)(_.getCause)
       .takeWhile(_ != null).map(t => Option(t.getMessage).getOrElse("")).mkString("|")
     assert(chain.contains("frozen-book dim"), s"unexpected failure: $chain")
-    assert(store.index.count() == before, "the failed batch committed rows")
+    assert(store.rounds().count() == before, "the failed batch committed rows")
   }
 
   test("a bookless store fails loudly instead of training per-batch books") {

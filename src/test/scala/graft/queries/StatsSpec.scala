@@ -404,4 +404,23 @@ class StatsSpec extends SparkTestBase {
     assert(emptyDf.columns.toSeq == Seq("_pid", "_off") && emptyDf.isEmpty)
     assert(emptyTotals.head.asInstanceOf[Long] == 0L)
   }
+
+  test("groupedCumCounts keeps a null group: same rows as the partitionBy window") {
+    import org.apache.spark.sql.expressions.Window
+    val hist = Seq[(Option[String], Long, Long)](
+      (Some("A"), 1L, 2L), (Some("A"), 3L, 1L), (Some("A"), 7L, 5L),
+      (None, 1L, 4L), (None, 2L, 1L), (None, 9L, 2L),
+      (Some("B"), 5L, 3L), (Some("B"), 6L, 1L)).toDF("g", "v", "cnt")
+      .repartition(3)
+    def rows(df: org.apache.spark.sql.DataFrame) =
+      df.select("g", "v", "cum", "n").as[(Option[String], Long, Long, Long)]
+        .collect().toSeq.sortBy(r => (r._1.getOrElse(""), r._1.isDefined, r._2))
+    val cum = Window.partitionBy(col("g")).orderBy(col("v"))
+      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    val want = rows(hist
+      .withColumn("cum", sum(col("cnt")).over(cum))
+      .withColumn("n", sum(col("cnt")).over(Window.partitionBy(col("g")))))
+    assert(want.count(_._1.isEmpty) == 3)
+    assert(rows(Stats.groupedCumCounts(hist, "g", "v", "cnt")) == want)
+  }
 }

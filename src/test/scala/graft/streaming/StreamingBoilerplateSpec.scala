@@ -39,7 +39,7 @@ class StreamingBoilerplateSpec extends SparkTestBase {
     assert(byDoc(10L) == ((1L, "its own different suffix seven eight nine ten")))
     // the store holds one frequency round per batch
     val store = new graft.ops.BoilerplateStore(spark, s"$root/freqs")
-    assert(store.roundFreqs.select("ingest_round").distinct().count() == 2)
+    assert(store.rounds().select("ingest_round").distinct().count() == 2)
   }
 
   test("a re-delivered batch replays idempotently (cut and round overwritten)") {
@@ -61,7 +61,7 @@ class StreamingBoilerplateSpec extends SparkTestBase {
     StreamingBoilerplate.processBatch(delta, 1L, s"$root/freqs", s"$root/clean")
     assert(snapshot() == once, "replay changed the cleaned output")
     val store = new graft.ops.BoilerplateStore(spark, s"$root/freqs")
-    assert(store.freqs().agg(sum("n_docs")).head().getLong(0) == 4L,
+    assert(store.state().agg(sum("n_docs")).head().getLong(0) == 4L,
       "replayed round double-counted its block frequencies")
   }
 }

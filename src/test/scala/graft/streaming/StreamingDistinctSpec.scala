@@ -54,6 +54,6 @@ class StreamingDistinctSpec extends SparkTestBase {
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(est == Map("view" -> 2L))
     // and the store holds exactly one round, not two
-    assert(store.roundSketches.select("ingest_round").distinct().count() == 1L)
+    assert(store.rounds().select("ingest_round").distinct().count() == 1L)
   }
 }

@@ -20,7 +20,7 @@ class StreamingNearDupSpec extends SparkTestBase {
     StreamingNearDup.start(spark, docsDir, s"$root/index", s"$root/pairs", s"$root/ckpt")
       .awaitTermination()
     val store = new graft.ops.NearDupIndexStore(spark, s"$root/index")
-    assert(store.index.count() == 2)
+    assert(store.rounds().count() == 2)
     // round 0 has nothing standing before it: no pairs (the empty
     // partitioned write leaves no footer, so pin the schema)
     val pairsSchema = org.apache.spark.sql.types.StructType(Seq(
@@ -34,7 +34,7 @@ class StreamingNearDupSpec extends SparkTestBase {
       .write.mode("append").parquet(docsDir)
     StreamingNearDup.start(spark, docsDir, s"$root/index", s"$root/pairs", s"$root/ckpt")
       .awaitTermination()
-    assert(store.index.count() == 3)
+    assert(store.rounds().count() == 3)
     val pairs = spark.read.parquet(s"$root/pairs")
       .select("new_doc", "old_doc").as[(Long, Long)].collect().toSet
     assert(pairs == Set((10L, 1L)), s"expected the planted cross-wave pair, got $pairs")
@@ -51,7 +51,7 @@ class StreamingNearDupSpec extends SparkTestBase {
     val once = spark.read.parquet(s"$root/pairs")
       .select("new_doc", "old_doc").as[(Long, Long)].collect().toSet
     assert(once == Set((10L, 1L)))
-    assert(store.index.count() == 2)
+    assert(store.rounds().count() == 2)
     // foreachBatch is at-least-once: the SAME batch id arrives again
     // AFTER its index round already landed. The round bound must stop
     // self-pairing and both writes must replace, not append.
@@ -60,6 +60,6 @@ class StreamingNearDupSpec extends SparkTestBase {
       .select("new_doc", "old_doc").as[(Long, Long)].collect().toSet
     assert(twice == once, "replay changed the pair set")
     assert(spark.read.parquet(s"$root/pairs").count() == 1, "replay duplicated pairs")
-    assert(store.index.count() == 2, "replay duplicated index rows")
+    assert(store.rounds().count() == 2, "replay duplicated index rows")
   }
 }
