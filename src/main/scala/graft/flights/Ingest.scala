@@ -1,8 +1,7 @@
 package graft.flights
 
-import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths}
-
+import graft.ops.RoundStore
+import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.{DataFrame, Row, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -35,27 +34,30 @@ class FlightIngest(spark: SparkSession, root: String) {
   def stagingPath: String = s"$root/staging"
   def ledgerPath: String  = s"$root/ledger"
 
-  /** Per-FILE state key for the directory form ([[ingestDirectory]]):
-    * the single-file API keeps the reference's singleton state paths
-    * (None), the directory form keys offset + marker by file name so
-    * each file carries its own independent resume contract. Set only
-    * inside ingestDirectory's per-file loop (single-writer, like the
-    * offset state itself). */
-  private var stateKey: Option[String] = None
-  private def keySuffix = stateKey.map("__" + _).getOrElse("")
-  private def statePath   = Paths.get(s"$root/state/flight_csv_offset$keySuffix")
-  private def inflightPath = Paths.get(s"$root/state/flight_inflight$keySuffix")
+  /** Offset and marker files sit on the local disk under `root`. The
+    * raw local file system writes them with no checksum side files, so
+    * a marker edited in place by hand still reads. Every write is
+    * atomic (temp file + rename): a crash never leaves a torn file. */
+  private val stateFs =
+    FileSystem.getLocal(spark.sparkContext.hadoopConfiguration).getRaw
+
+  /** State file `name` under a per-file state `key`: the single-file
+    * API keeps the reference's singleton state paths (None), the
+    * directory form ([[ingestDirectory]]) keys offset + marker by file
+    * name so each file carries its own independent resume contract. */
+  private def statePath(name: String, key: Option[String]) =
+    new Path(s"$root/state/$name${key.map("__" + _).getOrElse("")}")
+  private def offsetPath(key: Option[String]) = statePath("flight_csv_offset", key)
+  private def inflightPath(key: Option[String]) = statePath("flight_inflight", key)
+  private def readState(p: Path): Option[String] = RoundStore.readSmallFile(stateFs, p)
+  private def writeState(p: Path, text: String): Unit =
+    RoundStore.writeSmallFile(stateFs, p, text, replace = true)
 
   /** I-2: Airflow `Variable.get("flight_csv_offset", 0)` equivalent. */
-  def offset: Long =
-    if (Files.exists(statePath))
-      new String(Files.readAllBytes(statePath), StandardCharsets.UTF_8).trim.toLong
-    else 0L
+  def offset: Long = offsetOf(None)
 
-  private def writeOffset(v: Long): Unit = {
-    Files.createDirectories(statePath.getParent)
-    Files.write(statePath, v.toString.getBytes(StandardCharsets.UTF_8))
-  }
+  private def offsetOf(key: Option[String]): Long =
+    readState(offsetPath(key)).map(_.toLong).getOrElse(0L)
 
   def ledger: DataFrame =
     if (StarWarehouse.pathExists(spark, ledgerPath))
@@ -143,10 +145,15 @@ class FlightIngest(spark: SparkSession, root: String) {
     * grown tail are committed as separate increments in one call. */
   def ingest(csvPath: String): IngestResult = {
     requireSingleFile(csvPath)
-    var total = IngestResult(0, 0, offset)
+    drain(csvPath, None)
+  }
+
+  /** [[ingest]]'s batch loop over one file under state `key`. */
+  private def drain(csvPath: String, key: Option[String]): IngestResult = {
+    var total = IngestResult(0, 0, offsetOf(key))
     var again = true
     while (again) {
-      val (r, resumed) = ingestBatch(csvPath)
+      val (r, resumed) = ingestBatch(csvPath, key)
       total = IngestResult(total.rowsScanned + r.rowsScanned,
         total.rowsLoaded + r.rowsLoaded, r.newOffset)
       // a resumed batch was pinned to the crashed extent; the file may
@@ -157,25 +164,23 @@ class FlightIngest(spark: SparkSession, root: String) {
   }
 
   /** Directory form (VERDICT r5 #8): ingest every `*.csv` in `dir`
-    * under per-file state keys. By default FRESH files (offset 0, no
-    * crashed per-file marker — the append-only-directory steady state)
-    * are batched into ONE union scan/dedup/write under one seq
-    * ([[ingestFreshBatchStep]]); files with partial offsets (grown in
-    * place) keep the FULL single-file protocol — offset resume,
-    * intent marker, growth drain — in deterministic FILENAME order,
-    * because only a per-file scan has the row order their resume
-    * contract needs. `batchFreshFiles = false` forces the serial
-    * protocol for everything (bit-identical staging content; only seq
-    * allocation differs). The single-file offset contract is never
-    * stretched across files (the ambiguity [[requireSingleFile]]
-    * rejects); the ledger/staging/seq are the shared sinks they
-    * already are, so rows duplicated ACROSS files dedup exactly like
-    * rows duplicated across time. Idempotent: a re-run finds every
-    * per-file offset at EOF and early-exits. New files between runs
-    * simply join in (their state starts at 0). Returns totals;
-    * `newOffset` is the last batch/file's offset (offsets are
-    * per-file state, not a meaningful sum). */
-  def ingestDirectory(dir: String, batchFreshFiles: Boolean = true): IngestResult = {
+    * under per-file state keys. FRESH files (offset 0, no crashed
+    * per-file marker — the append-only-directory steady state) are
+    * batched into ONE union scan/dedup/write under one seq
+    * ([[ingestFreshBatchStep]]); files with an offset (grown, or
+    * replaced in place) keep the FULL single-file protocol — offset
+    * resume, shrink reset, intent marker, growth drain — in
+    * deterministic FILENAME order, because only a per-file scan has
+    * the row order their resume contract needs. The single-file
+    * offset contract is never stretched across files (the ambiguity
+    * [[requireSingleFile]] rejects); the ledger/staging/seq are the
+    * shared sinks they already are, so rows duplicated ACROSS files
+    * dedup exactly like rows duplicated across time. Idempotent: a
+    * re-run finds every per-file offset at EOF and early-exits. New
+    * files between runs simply join in (their state starts at 0).
+    * Returns totals; `newOffset` is the last batch/file's offset
+    * (offsets are per-file state, not a meaningful sum). */
+  def ingestDirectory(dir: String): IngestResult = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(p) && fs.getFileStatus(p).isDirectory,
@@ -184,21 +189,12 @@ class FlightIngest(spark: SparkSession, root: String) {
       .filter(s => s.isFile && s.getPath.getName.toLowerCase.endsWith(".csv"))
       .sortBy(_.getPath.getName)
     require(listCsv().nonEmpty, s"no *.csv files under '$dir'")
-    var total = IngestResult(0, 0, 0)
-    def add(r: IngestResult): Unit =
-      total = IngestResult(total.rowsScanned + r.rowsScanned,
+    val (fresh, batched) = ingestFreshBatchStep(listCsv)
+    listCsv().filterNot(f => batched(f.getPath.getName)).foldLeft(fresh) { (total, f) =>
+      val r = drain(f.getPath.toString, Some(fileKey(f)))
+      IngestResult(total.rowsScanned + r.rowsScanned,
         total.rowsLoaded + r.rowsLoaded, r.newOffset)
-    var batched = Set.empty[String]
-    if (batchFreshFiles) {
-      val (r, names) = ingestFreshBatchStep(listCsv)
-      add(r); batched = names
     }
-    listCsv().filterNot(f => batched(f.getPath.getName)).foreach { f =>
-      stateKey = Some(fileKey(f))
-      try add(ingest(f.getPath.toString))
-      finally stateKey = None
-    }
-    total
   }
 
   /** Batched fresh-file fast path (the per-file PARALLEL directory
@@ -244,14 +240,15 @@ class FlightIngest(spark: SparkSession, root: String) {
         entries.foreach { e =>
           byKey.get(e.key).foreach { f =>
             if (extentHeadHash(f.getPath.toString, 0) == e.headHash)
-              writeOffsetOf(e.key, e.end)
+              writeOffset(Some(e.key), e.end)
           }
         }
       } else dropUncommittedStaging(seq)
       clearBatchMarker()
     }
     val fresh = listCsv().filter { f =>
-      offsetOf(fileKey(f)) == 0L && !perFileMarkerExists(fileKey(f))
+      val key = Some(fileKey(f))
+      offsetOf(key) == 0L && !stateFs.exists(inflightPath(key))
     }
     if (fresh.isEmpty) return (IngestResult(0, 0, 0), Set.empty)
     // one distributed line-count pass over ALL fresh files (I-1 batched)
@@ -304,16 +301,16 @@ class FlightIngest(spark: SparkSession, root: String) {
       }
       n
     } finally freshRows.unpersist()
-    entries.foreach { case (_, e) => writeOffsetOf(e.key, e.end) }
+    entries.foreach { case (_, e) => writeOffset(Some(e.key), e.end) }
     clearBatchMarker()
     (IngestResult(entries.map(_._2.end).sum, freshCount, entries.last._2.end),
       entries.map(_._1.getPath.getName).toSet)
   }
 
-  private def ingestBatch(csvPath: String): (IngestResult, Boolean) = {
+  private def ingestBatch(csvPath: String, key: Option[String]): (IngestResult, Boolean) = {
     // I-1: raw line count (includes header, like the reference's rb scan)
     val lineCount = spark.read.text(csvPath).count()
-    var off = offset
+    var off = offsetOf(key)
     // I-3: file shrank => new file, reset. PINNED REFERENCE BUG
     // (ingestion.py:41: `if total_lines < offset`): lineCount includes
     // the header while the offset counts data rows, so a file that
@@ -327,7 +324,7 @@ class FlightIngest(spark: SparkSession, root: String) {
       // new file's rows at those positions are different data, so
       // resuming it would commit wrong rows under a committed batch's
       // seq (overwriting its ledger partition). Shrink-reset kills it.
-      clearInflight()
+      clearInflight(key)
     }
     // resume iff an intent marker pins an unfinished extent at OUR
     // offset that FITS the current file; markers from other offsets
@@ -344,18 +341,18 @@ class FlightIngest(spark: SparkSession, root: String) {
     // partition (if any, and only if its ledger partition is absent —
     // i.e. the batch never logically committed) is dropped so the
     // fresh first-load of the replacement cannot double-count.
-    val resume = readInflight().filter { m =>
+    val resume = readInflight(key).filter { m =>
       val fits = m.off == off && m.end > off && m.end <= lineCount - 1
       // legacy (3-field) markers carry no fingerprint — forall passes
       // them on the fits check alone, the pre-fingerprint behavior
       val alive = fits && m.headHash.forall(_ == extentHeadHash(csvPath, m.off))
-      if (fits && !alive) { dropUncommittedStaging(m.seq); clearInflight() }
+      if (fits && !alive) { dropUncommittedStaging(m.seq); clearInflight(key) }
       alive
     }
     val end = resume.map(_.end).getOrElse(lineCount - 1)
     // I-4: early exit
     val rowsToProcess = end - off
-    if (rowsToProcess <= 0) { clearInflight(); return (IngestResult(0, 0, off), false) }
+    if (rowsToProcess <= 0) { clearInflight(key); return (IngestResult(0, 0, off), false) }
     val seq = resume.map(_.seq).getOrElse(nextBatchSeq())
     // on a resume the marker on disk already records exactly this
     // extent — do NOT rewrite it (a crash mid-rewrite would tear the
@@ -363,7 +360,7 @@ class FlightIngest(spark: SparkSession, root: String) {
     // marker then reads as fresh-batch and a new seq would duplicate
     // the extent's rows beside the orphaned partition)
     if (resume.isEmpty)
-      writeInflight(Inflight(seq, off, end, Some(extentHeadHash(csvPath, off))))
+      writeInflight(key, Inflight(seq, off, end, Some(extentHeadHash(csvPath, off))))
 
     // I-5: header-aware resume — skip data rows outside [off, end) in
     // file order. zipWithIndex preserves file order for a single CSV
@@ -401,13 +398,14 @@ class FlightIngest(spark: SparkSession, root: String) {
         val staged = renamed.withColumn("ingest_batch", lit(seq))
           .write.partitionBy("ingest_batch").mode(SaveMode.Overwrite)
         // I-7 replace semantics apply to the SINGLETON contract only: in
-        // directory mode (stateKey set) staging holds other files'
+        // directory mode (a per-file key) staging holds other files'
         // partitions, which a static overwrite would silently wipe — a
-        // later file's first load must land beside them, not replace
-        // them. Consequence: a file REPLACED in place keeps its old rows
-        // under their old seqs (same documented residue as the all-seen
-        // shrink reset; V-3 alarms, compaction is the cleanup path).
-        if (off == 0 && stateKey.isEmpty) staged.parquet(stagingPath)
+        // file replaced in place (shrink reset to offset 0) must land
+        // beside them, not replace them. Consequence: the replaced
+        // file keeps its old rows under their old seqs (same documented
+        // residue as the all-seen shrink reset; V-3 alarms, compaction
+        // is the cleanup path).
+        if (off == 0 && key.isEmpty) staged.parquet(stagingPath)
         else staged.option("partitionOverwriteMode", "dynamic").parquet(stagingPath)
         afterStagingWrite() // crash-injection seam (no-op in production)
         // I-8: ledger append with load timestamp — as an idempotent
@@ -424,8 +422,8 @@ class FlightIngest(spark: SparkSession, root: String) {
     } finally fresh.unpersist()
     // I-9: offset advances by rows *scanned* (incl. dupes), as in the
     // reference (ingestion.py:126: offset + rows_processed).
-    writeOffset(end)
-    clearInflight()
+    writeOffset(key, end)
+    clearInflight(key)
     (IngestResult(rowsToProcess, freshCount, end), resume.isDefined)
   }
 
@@ -440,51 +438,34 @@ class FlightIngest(spark: SparkSession, root: String) {
   private def fileKey(f: org.apache.hadoop.fs.FileStatus): String =
     f.getPath.getName.replaceAll("[^A-Za-z0-9._-]", "_")
 
-  private def offsetOf(key: String): Long = {
-    stateKey = Some(key); try offset finally stateKey = None
-  }
-  private def writeOffsetOf(key: String, v: Long): Unit = {
-    stateKey = Some(key); try writeOffset(v) finally stateKey = None
-  }
-  private def perFileMarkerExists(key: String): Boolean = {
-    stateKey = Some(key)
-    try Files.exists(inflightPath) finally stateKey = None
-  }
+  private def writeOffset(key: Option[String], v: Long): Unit =
+    writeState(offsetPath(key), v.toString)
 
   /** Directory-batch intent marker: `seq|key=end:headHash|...`. The
     * `__dirbatch` suffix cannot collide with a per-file key (only
     * `*.csv` files are listed, so every per-file key ends in a
-    * sanitized ".csv"). Atomic write, like the per-file marker. */
+    * sanitized ".csv"). */
   private case class BatchEntry(key: String, end: Long, headHash: Long)
-  private def batchMarkerPath =
-    Paths.get(s"$root/state/flight_inflight__dirbatch")
+  private def batchMarkerPath = inflightPath(Some("dirbatch"))
 
   private def readBatchMarker(): Option[(Long, Seq[BatchEntry])] =
-    if (!Files.exists(batchMarkerPath)) None
-    else try {
-      val parts = new String(Files.readAllBytes(batchMarkerPath),
-        StandardCharsets.UTF_8).trim.split('|')
-      val es = parts.tail.toSeq.map { e =>
-        val Array(k, rest) = e.split('=')
-        val Array(end, h) = rest.split(':')
-        BatchEntry(k, end.toLong, h.toLong)
-      }
-      if (es.isEmpty) None else Some(parts.head.toLong -> es)
-    } catch { case _: RuntimeException => None }
+    readState(batchMarkerPath).flatMap { text =>
+      try {
+        val parts = text.split('|')
+        val es = parts.tail.toSeq.map { e =>
+          val Array(k, rest) = e.split('=')
+          val Array(end, h) = rest.split(':')
+          BatchEntry(k, end.toLong, h.toLong)
+        }
+        if (es.isEmpty) None else Some(parts.head.toLong -> es)
+      } catch { case _: RuntimeException => None }
+    }
 
-  private def writeBatchMarker(seq: Long, es: Seq[BatchEntry]): Unit = {
-    Files.createDirectories(batchMarkerPath.getParent)
-    val body = (seq.toString +: es.map(e => s"${e.key}=${e.end}:${e.headHash}"))
-      .mkString("|")
-    val tmp = batchMarkerPath.resolveSibling(
-      batchMarkerPath.getFileName.toString + ".tmp")
-    Files.write(tmp, body.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, batchMarkerPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeBatchMarker(seq: Long, es: Seq[BatchEntry]): Unit =
+    writeState(batchMarkerPath,
+      (seq.toString +: es.map(e => s"${e.key}=${e.end}:${e.headHash}")).mkString("|"))
 
-  private def clearBatchMarker(): Unit = Files.deleteIfExists(batchMarkerPath)
+  private def clearBatchMarker(): Unit = stateFs.delete(batchMarkerPath, false)
 
   private def ledgerPartExists(seq: Long): Boolean = {
     val part = new org.apache.hadoop.fs.Path(s"$ledgerPath/ingest_batch=$seq")
@@ -536,31 +517,27 @@ class FlightIngest(spark: SparkSession, root: String) {
       fs.delete(stagingPart, true)
   }
 
-  private def readInflight(): Option[Inflight] =
-    if (!Files.exists(inflightPath)) None
-    else new String(Files.readAllBytes(inflightPath), StandardCharsets.UTF_8)
-      .trim.split(':') match {
+  /** An unparsable marker reads as absent (fresh batch); the atomic
+    * write means only a hand edit can produce one. A torn marker would
+    * be worse than none: a retry would re-run the extent under a NEW
+    * seq beside the old partitions. */
+  private def readInflight(key: Option[String]): Option[Inflight] =
+    readState(inflightPath(key)).flatMap { text =>
+      try text.split(':') match {
         case Array(s, o, e, h) =>
           Some(Inflight(s.toLong, o.toLong, e.toLong, Some(h.toLong)))
         case Array(s, o, e) => // legacy pre-fingerprint marker: resume
           Some(Inflight(s.toLong, o.toLong, e.toLong, None))
-        case _ => None // torn marker write: treat as absent (fresh batch)
-      }
+        case _ => None
+      } catch { case _: NumberFormatException => None }
+    }
 
-  /** Atomic via temp-file + rename: a crash mid-write must never leave
-    * a torn marker (it would read as "no marker" and a retry would
-    * re-run the extent under a NEW seq beside the old partitions). */
-  private def writeInflight(m: Inflight): Unit = {
-    Files.createDirectories(inflightPath.getParent)
-    val tmp = inflightPath.resolveSibling(inflightPath.getFileName.toString + ".tmp")
-    Files.write(tmp,
-      s"${m.seq}:${m.off}:${m.end}:${m.headHash.getOrElse(0L)}".getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, inflightPath,
-      java.nio.file.StandardCopyOption.REPLACE_EXISTING,
-      java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-  }
+  private def writeInflight(key: Option[String], m: Inflight): Unit =
+    writeState(inflightPath(key),
+      s"${m.seq}:${m.off}:${m.end}:${m.headHash.getOrElse(0L)}")
 
-  private def clearInflight(): Unit = Files.deleteIfExists(inflightPath)
+  private def clearInflight(key: Option[String]): Unit =
+    stateFs.delete(inflightPath(key), false)
 
   /** Next batch sequence: one past the highest `ingest_batch=` partition
     * either sink has ever committed (ledger partitions are never

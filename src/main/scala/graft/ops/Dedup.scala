@@ -82,7 +82,7 @@ object Dedup {
     *
     * THREAD CONTRACT (ADVICE r13): the scope covers THIS driver thread
     * only. A body that spawns driver threads which themselves register
-    * sketches (the q34c-style futures) must not rely on the scope for
+    * sketches (the [[DriverPool]] tasks) must not rely on the scope for
     * those registrations — they land in the global queue and live
     * until the next [[releaseSketchCaches]] (LRU-evictable
     * MEMORY_AND_DISK in the meantime, so the failure mode is deferred
@@ -621,68 +621,46 @@ object Dedup {
         .select(lit(tier).as("tier"), col("n_truth"), col("n_found"),
           col("n_reported"),
           round(col("n_found").cast(DoubleType) / col("n_truth"), 6).as("recall"))
-    // The three tier pair-sets materialize CONCURRENTLY (one driver
-    // thread each, VERDICT r7 #5): serially they cost the SUM of the
-    // tier times in wall clock while each tier's stages leave most of
-    // the executor pool idle at its stragglers. The eager-materialization rule
-    // exists to stop concurrent consumers RACING a lazily-populated
-    // cache — and every frame the tiers share (members, repTh via
-    // repSk's job, repSk, truth) is materialized ABOVE, before any
-    // future starts, so the hazard cannot arise: each future touches
-    // only its own tier-private frames. Results are order-independent
-    // (the union below is built in fixed tier order).
+    // The three tier pair-sets materialize concurrently. Every frame
+    // the tiers share (members, repTh via repSk's job, repSk, truth)
+    // is materialized above, before any task starts, so no two tasks
+    // race to populate one lazy cache; each task touches only its own
+    // tier-private frames.
     members.count() // members is lazily persisted; count it pre-race
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val rows =
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        val tiers = Seq(
-          ("minhash_lsh", col("true_jaccard") >= 0.5,
-            () => minhashNearDupsCoreFromShingles(repSk, members, 0.5)),
-          ("simhash_hamming", col("true_hamming") <= 3,
-            () => simhashNearDupsCore(repTh, members, 3)),
-          ("ngram_blocked", col("true_jaccard") >= 0.5,
-            () => ngramBlockedCoreFromShingles(repSk, members, 0.5)))
-        val mats = tiers.map { case (tier, eligible, mk) =>
-          (tier, eligible, scala.concurrent.Future(materializedSketch(
-            mk().select(col("doc_a"), col("doc_b"))
-              .dropDuplicates("doc_a", "doc_b"))))
-        }
-        mats.map { case (tier, eligible, fut) =>
-          tierRow(tier, eligible,
-            scala.concurrent.Await.result(fut, scala.concurrent.duration.Duration.Inf))
-        }
-      } finally pool.shutdown()
+    val tiers = Seq(
+      ("minhash_lsh", col("true_jaccard") >= 0.5,
+        () => minhashNearDupsCoreFromShingles(repSk, members, 0.5)),
+      ("simhash_hamming", col("true_hamming") <= 3,
+        () => simhashNearDupsCore(repTh, members, 3)),
+      ("ngram_blocked", col("true_jaccard") >= 0.5,
+        () => ngramBlockedCoreFromShingles(repSk, members, 0.5)))
+    val found = DriverPool.run("q34c")(tiers.map { case (tier, _, mk) =>
+      tier -> (() => materializedSketch(mk().select(col("doc_a"), col("doc_b"))
+        .dropDuplicates("doc_a", "doc_b")))
+    }: _*)
+    val rows = tiers.zip(found).map { case ((tier, eligible, _), f) =>
+      tierRow(tier, eligible, f) }
     rows.reduce(_ unionByName _).orderBy(col("tier"))
   }
 
   /** The blocked n-gram tier re-derived from the SHARED rep
     * token-hash frame (VERDICT r5 #5) — q36's pair semantics (exact
     * shingle Jaccard within first-4-token blocks) without the third
-    * corpus scan + tokenization the audit used to pay for it. Two
-    * deliberate, equivalence-preserving substitutions vs
-    * [[ngramJaccardBlocked]]: the block key is xxhash64 of the first
-    * four token HASHES instead of md5 of the token strings (key
-    * equality coincides modulo the same 2^-64 collision budget every
-    * hashed tier accepts), and identical-text documents pair through
-    * the members expansion at their true Jaccard of 1.0 instead of
-    * re-verifying — the collapse-invariance argument the minhash tier
-    * documents. The found-SET is therefore the q36 set; q36 itself
-    * stays string-keyed under its DuckDB oracle. */
-  private def ngramBlockedCore(repTh: DataFrame, members: DataFrame,
-                               threshold: Double): DataFrame =
-    ngramBlockedCoreFromShingles(repTh.select(col("thash"), col("doc_id"),
-        xxhash64(slice(col("th"), 1, 4)).as("fp"),
-        shinglesFromTokenHashes(col("th")).as("sh")),
-      members, threshold)
-
-  /** The tier over a pre-built (thash, doc_id, fp, sh) frame; the
-    * self-join's two branches then read the shared cache instead of
-    * each re-deriving shingles from the token hashes. */
-  private def ngramBlockedCoreFromShingles(preIdx: DataFrame, members: DataFrame,
+    * corpus scan + tokenization the audit used to pay for it. `idx` is
+    * the pre-built (thash, doc_id, fp, sh) frame, so the self-join's
+    * two branches read the shared cache instead of each re-deriving
+    * shingles from the token hashes. Two deliberate,
+    * equivalence-preserving substitutions vs [[ngramJaccardBlocked]]:
+    * the block key `fp` is xxhash64 of the first four token HASHES
+    * instead of md5 of the token strings (key equality coincides
+    * modulo the same 2^-64 collision budget every hashed tier
+    * accepts), and identical-text documents pair through the members
+    * expansion at their true Jaccard of 1.0 instead of re-verifying —
+    * the collapse-invariance argument the minhash tier documents. The
+    * found-SET is therefore the q36 set; q36 itself stays string-keyed
+    * under its DuckDB oracle. */
+  private def ngramBlockedCoreFromShingles(idx: DataFrame, members: DataFrame,
                                            threshold: Double): DataFrame = {
-    val idx = preIdx
     val repPairs = idx.select(col("fp"), col("doc_id").as("doc_a"),
         col("thash").as("thash_a"), col("sh").as("sh_a"))
       .join(idx.select(col("fp"), col("doc_id").as("doc_b"),
@@ -1162,7 +1140,7 @@ object Dedup {
     * iterative-propagation operator): when the edge list fits the
     * driver (≤ [[fusedMaxEdges]]), ONE collect + an in-memory
     * union-find replaces the whole O(diameter)-round checkpointed
-    * propagation loop — the labels come back as a broadcast-joined
+    * propagation loop — the labels come back as a driver-built
     * mapping, so a delta-bounded graph (q211's quotient, q179's
     * support-2 universe) pays one job instead of 2 + rounds
     * localCheckpoint jobs. Past the cap the distributed
@@ -1175,7 +1153,11 @@ object Dedup {
     * `docs = None` labels only the edge ENDPOINTS (the q179/quotient
     * shape, where nodes are defined as endpoints — skips the
     * distinct-endpoints job entirely on the fused path); `Some(docs)`
-    * additionally passes through isolated ids as their own keeper. */
+    * additionally passes through isolated ids as their own keeper.
+    * The mapping has one row per endpoint (up to ~4M at the edge
+    * cap) and carries no broadcast hint: it is a local relation of
+    * known size, so the planner broadcasts it only under the
+    * auto-broadcast threshold. */
   private[graft] def keeperLabels(docs: Option[DataFrame],
                                   pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
@@ -1214,8 +1196,7 @@ object Dedup {
       docs match {
         case None => mapping
         case Some(ds) => ds.select(col("doc_id"))
-          .join(broadcast(mapping.withColumnRenamed("keeper", "_k")),
-            Seq("doc_id"), "left")
+          .join(mapping.withColumnRenamed("keeper", "_k"), Seq("doc_id"), "left")
           .select(col("doc_id"), coalesce(col("_k"), col("doc_id")).as("keeper"))
       }
     } else {

@@ -415,102 +415,71 @@ object Privacy {
     // two-consumer discipline, here a ten-consumer one)
     val del = Dedup.materializedSketch(deletionList(s, d))
     val redactedLog = ev.join(broadcast(del), Seq("user_id"), "left_anti")
-    // r16 (VERDICT r15 #1, guide §2.6 "overlap independent jobs"): the
-    // certificate's ten surface counts are independent jobs that the
-    // r15 spelling evaluated as ONE union action — each surface's
-    // stage tail left the pool idle, and the four redacted-store
-    // builds plus the two redacted-recompute sketches all ran
-    // serially before it. Now every count runs as its own driver-pool
-    // job (the q31g pattern), each future resolves its OWN store
-    // dependencies (ScratchStores' per-key latches — ADVICE r15 —
-    // make concurrent builds of different stores safe and concurrent
-    // consults of the same store converge on one build), and the
-    // certificate row set — value-identical, the same ten counts — is
-    // assembled from the scalars. Submission order puts the two
-    // sketches first so the s4/s5 futures that await them can never
-    // starve the pool.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(6)
-    val counted =
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration.Inf
-        val cents0 = expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
-        val bandsF = Future(
-          Dedup.materializedSketch(MatView.bandState(redactedLog)))
-        val extremesF = Future(Dedup.materializedSketch(
-          redactedLog.filter(col("value").isNotNull)
-            .groupBy(col("event_type"))
-            .agg(min(cents0).as("rmin"), max(cents0).as("rmax"))))
-        def cnt(name: String, which: String)(mk: => DataFrame): Future[Long] =
-          Future {
-            s.sparkContext.setJobDescription(s"q223 $name $which")
-            mk.count()
-          }
-        // surface 1: the event log — the after-count reads the
-        // PERSISTED redacted artifact (ADVICE r14: the old in-memory
-        // semi-of-anti was zero by algebra; this measures what
-        // actually landed on disk)
-        val s1b = cnt("events_log", "before")(
-          ev.join(broadcast(del), Seq("user_id"), "left_semi"))
-        val s1a = cnt("events_log", "after")(
-          s.read.parquet(redactedEventsPath(s, d))
-            .join(broadcast(del), Seq("user_id"), "left_semi"))
-        // surface 2: the q209 distinct-view state (standing vs redacted)
-        val s2b = cnt("distinct_view_state", "before")(
-          MatView.distinctLiveState(s, d)
-            .join(broadcast(del), Seq("user_id"), "left_semi"))
-        val s2a = cnt("distinct_view_state", "after") {
-          val (rdv, rwm) = redactedDvStore(s, d)
-          rdv.mergedWith(survivingEventsDeltaFrom(del, s, d, rwm))
-            .join(broadcast(del), Seq("user_id"), "left_semi")
-        }
-        // surface 3: the retrieval index (standing vs q221's erased)
-        val erasedIds = broadcast(erasedDocs(s, d).select(col("doc_id")))
-        val s3b = cnt("postings_index", "before")(
-          PostingsIndex.liveIndex(s, d).join(erasedIds, Seq("doc_id"), "left_semi"))
-        val s3a = cnt("postings_index", "after")(
-          PostingsIndex.erasedLiveIndex(s, d)
-            .join(erasedIds, Seq("doc_id"), "left_semi"))
-        // surface 4: the band-histogram state — residual value
-        // influence: (type, band, n) rows differing from the redacted
-        // recompute
-        val s4b = cnt("band_view_state", "before") {
-          val redactedBands = Await.result(bandsF, Inf)
-          MatView.bandLiveState(s, d).join(redactedBands,
-            Seq("event_type", "band", "n"), "left_anti")
-        }
-        val s4a = cnt("band_view_state", "after") {
-          val redactedBands = Await.result(bandsF, Inf)
-          val (rbs, bwm) = redactedBandStore(s, d)
-          rbs.mergedWith(survivingEventsDeltaFrom(del, s, d, bwm))
-            .join(redactedBands, Seq("event_type", "band", "n"), "left_anti")
-        }
-        // surface 5: the extreme-buffer state — residual influence on
-        // the SERVED view (the buffer's physical rows carry truncation
-        // bounds and retraction residue by design): groups whose
-        // (min, max) differ from the redacted recompute
-        def extremeDiff(redactedExtremes: DataFrame)(served: DataFrame): DataFrame =
-          served.join(redactedExtremes, Seq("event_type"), "full_outer")
-            .filter(!(col("min_cents") <=> col("rmin") &&
-              col("max_cents") <=> col("rmax")))
-        val s5b = cnt("extreme_buffer_state", "before")(
-          extremeDiff(Await.result(extremesF, Inf))(
-            MatView.rawExtremesLiveView(s, d)))
-        val s5a = cnt("extreme_buffer_state", "after") {
-          val redactedExtremes = Await.result(extremesF, Inf)
-          val (rxs, xwm) = redactedExtremeStore(s, d)
-          extremeDiff(redactedExtremes)(MatView.extremesExactView(
-            rxs.mergedWith(survivingEventsDeltaFrom(del, s, d, xwm))))
-        }
-        Seq(("events_log", s1b, s1a),
-          ("distinct_view_state", s2b, s2a),
-          ("postings_index", s3b, s3a),
-          ("band_view_state", s4b, s4a),
-          ("extreme_buffer_state", s5b, s5a)).map { case (name, fb, fa) =>
-          (name, Await.result(fb, Inf), Await.result(fa, Inf)) }
-      } finally pool.shutdown()
+    // The ten surface counts are independent jobs; each task resolves
+    // its own store dependencies (ScratchStores' per-key latches make
+    // concurrent builds of different stores safe, and concurrent
+    // consults of one store converge on one build). The two redacted
+    // recompute sketches are lazy: the first surface-4 or surface-5
+    // count to need one builds it, so no task awaits another task.
+    val cents0 = expr("cast(cast(value as decimal(18,2)) * 100 as bigint)")
+    lazy val redactedBands =
+      Dedup.materializedSketch(MatView.bandState(redactedLog))
+    lazy val redactedExtremes = Dedup.materializedSketch(
+      redactedLog.filter(col("value").isNotNull)
+        .groupBy(col("event_type"))
+        .agg(min(cents0).as("rmin"), max(cents0).as("rmax")))
+    // one surface: its before and after counts, as two tasks
+    def surface(name: String)(before: => DataFrame)(after: => DataFrame) =
+      name -> Seq(s"$name before" -> (() => before.count()),
+        s"$name after" -> (() => after.count()))
+    // surface 3: the retrieval index (standing vs q221's erased)
+    val erasedIds = broadcast(erasedDocs(s, d).select(col("doc_id")))
+    // surface 5: the extreme-buffer state — residual influence on
+    // the SERVED view (the buffer's physical rows carry truncation
+    // bounds and retraction residue by design): groups whose
+    // (min, max) differ from the redacted recompute
+    def extremeDiff(served: DataFrame): DataFrame =
+      served.join(redactedExtremes, Seq("event_type"), "full_outer")
+        .filter(!(col("min_cents") <=> col("rmin") &&
+          col("max_cents") <=> col("rmax")))
+    val surfaces = Seq(
+      // surface 1: the event log — the after-count reads the
+      // PERSISTED redacted artifact (ADVICE r14: the old in-memory
+      // semi-of-anti was zero by algebra; this measures what
+      // actually landed on disk)
+      surface("events_log")(
+        ev.join(broadcast(del), Seq("user_id"), "left_semi"))(
+        s.read.parquet(redactedEventsPath(s, d))
+          .join(broadcast(del), Seq("user_id"), "left_semi")),
+      // surface 2: the q209 distinct-view state (standing vs redacted)
+      surface("distinct_view_state")(
+        MatView.distinctLiveState(s, d)
+          .join(broadcast(del), Seq("user_id"), "left_semi")) {
+        val (rdv, rwm) = redactedDvStore(s, d)
+        rdv.mergedWith(survivingEventsDeltaFrom(del, s, d, rwm))
+          .join(broadcast(del), Seq("user_id"), "left_semi")
+      },
+      surface("postings_index")(
+        PostingsIndex.liveIndex(s, d).join(erasedIds, Seq("doc_id"), "left_semi"))(
+        PostingsIndex.erasedLiveIndex(s, d)
+          .join(erasedIds, Seq("doc_id"), "left_semi")),
+      // surface 4: the band-histogram state — residual value
+      // influence: (type, band, n) rows differing from the redacted
+      // recompute
+      surface("band_view_state")(
+        MatView.bandLiveState(s, d).join(redactedBands,
+          Seq("event_type", "band", "n"), "left_anti")) {
+        val (rbs, bwm) = redactedBandStore(s, d)
+        rbs.mergedWith(survivingEventsDeltaFrom(del, s, d, bwm))
+          .join(redactedBands, Seq("event_type", "band", "n"), "left_anti")
+      },
+      surface("extreme_buffer_state")(
+        extremeDiff(MatView.rawExtremesLiveView(s, d))) {
+        val (rxs, xwm) = redactedExtremeStore(s, d)
+        extremeDiff(MatView.extremesExactView(
+          rxs.mergedWith(survivingEventsDeltaFrom(del, s, d, xwm))))
+      })
+    val counts = DriverPool.run("q223")(surfaces.flatMap(_._2): _*)
     val schema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("surface",
         org.apache.spark.sql.types.StringType, nullable = false),
@@ -518,9 +487,9 @@ object Privacy {
         org.apache.spark.sql.types.LongType, nullable = false),
       org.apache.spark.sql.types.StructField("rows_after",
         org.apache.spark.sql.types.LongType, nullable = false)))
-    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](counted.size)
-    counted.foreach { case (n, b, a) =>
-      rows.add(org.apache.spark.sql.Row(n, b, a)) }
+    val rows = new java.util.ArrayList[org.apache.spark.sql.Row](surfaces.size)
+    surfaces.zip(counts.grouped(2)).foreach { case ((name, _), Seq(b, a)) =>
+      rows.add(org.apache.spark.sql.Row(name, b, a)) }
     s.createDataFrame(rows, schema).orderBy(col("surface"))
   }
 

@@ -293,7 +293,7 @@ private[graft] object RoundStore {
     meta.toSeq.sortBy(_._1).map { case (k, v) => s"$k=$v" }.mkString("; ")
 
   /** The trimmed text of a small side file, or None if it is absent. */
-  private[ops] def readSmallFile(fs: FileSystem, file: Path): Option[String] =
+  private[graft] def readSmallFile(fs: FileSystem, file: Path): Option[String] =
     if (!fs.exists(file)) None
     else {
       val in = fs.open(file)
@@ -305,8 +305,8 @@ private[graft] object RoundStore {
     * rename loses to an existing file, `replace` deletes that file and
     * renames again (or fails); otherwise the temp file is dropped and
     * the existing file stands. */
-  private def writeSmallFile(fs: FileSystem, file: Path, text: String,
-                             replace: Boolean): Unit = {
+  private[graft] def writeSmallFile(fs: FileSystem, file: Path, text: String,
+                                    replace: Boolean): Unit = {
     val tmp = new Path(s"$file.tmp")
     val out = fs.create(tmp, true)
     try out.write(text.getBytes(java.nio.charset.StandardCharsets.UTF_8))

@@ -903,33 +903,21 @@ object Similarity {
         val rnd = new scala.util.Random(7919L * id + 17L)
         v.map(x => x + eps * (rnd.nextDouble() * 2 - 1))
       }
-      // r15 (guide §2.6 "overlap independent jobs"): the six
-      // (method, regime) audits are independent count jobs that each
-      // leave most of the pool idle at their stragglers — run them on
-      // a small driver pool (the q34c tier-race pattern) instead of
-      // serially. Shared state is read-only by now: the codebook/
-      // centroid caches are computeIfAbsent-memoized and the PQ store
-      // build is synchronized in ScratchStores.pathFor; each future's
-      // frames are otherwise private. Result order is fixed by the
-      // comprehension, not completion order.
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-      val rows =
-        try {
-          implicit val ec: scala.concurrent.ExecutionContext =
-            scala.concurrent.ExecutionContext.fromExecutorService(pool)
-          val futs = for {
-            (mName, mFn) <- methods
-            (rName, eps) <- regimes
-          } yield scala.concurrent.Future {
-            val qs = seeds.map { case (vid, v) => (qidOff + vid, perturb(v, eps, vid)) }
-            val recovered = mFn(qs)
-              .filter(col("vec_id") === col("qid") - qidOff).count()
-            (mName, rName, seeds.length.toLong, recovered,
-              recovered.toDouble / seeds.length)
-          }
-          futs.map(f => scala.concurrent.Await.result(
-            f, scala.concurrent.duration.Duration.Inf))
-        } finally pool.shutdown()
+      // The six (method, regime) audits are independent count jobs.
+      // The codebook/centroid caches they share are computeIfAbsent-
+      // memoized and the PQ store build is latched in
+      // ScratchStores.pathFor; each task's frames are otherwise private.
+      val audits = for {
+        (mName, mFn) <- methods
+        (rName, eps) <- regimes
+      } yield s"$mName $rName" -> { () =>
+        val qs = seeds.map { case (vid, v) => (qidOff + vid, perturb(v, eps, vid)) }
+        val recovered = mFn(qs)
+          .filter(col("vec_id") === col("qid") - qidOff).count()
+        (mName, rName, seeds.length.toLong, recovered,
+          recovered.toDouble / seeds.length)
+      }
+      val rows = DriverPool.run("q31g")(audits: _*)
       rows.toDF("method", "regime", "n_planted", "n_recovered", "recall")
         .withColumn("recall", quant6(col("recall")))
         .orderBy(col("method"), col("regime"))

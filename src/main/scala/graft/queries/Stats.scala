@@ -651,31 +651,19 @@ object Stats {
         count(lit(1)).as("n_orders"),
         sum(col("o_totalprice").cast(D6)).cast(DecimalType(18, 2)).as("spend_d")))
     val n = cust.count()
-    // r16 (guide §2.6): the three quintile rankings are INDEPENDENT
-    // functions of the same cached frame — the r15 chain ran their
-    // rangeShards persist/collect barriers serially (3 sequential
-    // job pairs). Each ranking now builds on a 3-thread driver pool
-    // (the q31g pattern) and emits a skinny (o_custkey, quintile)
-    // map; the roll-up joins the maps back on the unique customer
-    // key. Ranks are functions of (order cols, custkey) only, so the
-    // labels — and the (r,f,m) cube — are bit-identical to the
-    // chained spelling (oracle re-checked).
+    // The three quintile rankings are independent functions of the
+    // same cached frame, so they run concurrently; each emits a skinny
+    // (o_custkey, quintile) map that the roll-up joins back on the
+    // unique customer key. Ranks are functions of (order cols,
+    // custkey) only, so the labels do not depend on the run order.
     def quintileLabels(orderC: Seq[String], rank: String, q: String) =
       globalRank(cust, orderC, rank)
         .withColumn(q, ntileOfRank(col(rank), n, 5))
         .select(col("o_custkey"), col(q))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    val (rq, fq, mq) =
-      try {
-        implicit val ec: scala.concurrent.ExecutionContext =
-          scala.concurrent.ExecutionContext.fromExecutorService(pool)
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration.Inf
-        val rf = Future(quintileLabels(Seq("last_day", "o_custkey"), "_rr", "r_q"))
-        val ff = Future(quintileLabels(Seq("n_orders", "o_custkey"), "_rf", "f_q"))
-        val mf = Future(quintileLabels(Seq("spend_d", "o_custkey"), "_rm", "m_q"))
-        (Await.result(rf, Inf), Await.result(ff, Inf), Await.result(mf, Inf))
-      } finally pool.shutdown()
+    val Seq(rq, fq, mq) = graft.ops.DriverPool.run("q128")(
+      "recency" -> (() => quintileLabels(Seq("last_day", "o_custkey"), "_rr", "r_q")),
+      "frequency" -> (() => quintileLabels(Seq("n_orders", "o_custkey"), "_rf", "f_q")),
+      "monetary" -> (() => quintileLabels(Seq("spend_d", "o_custkey"), "_rm", "m_q")))
     val scored = cust.select(col("o_custkey"), col("spend_d"))
       .join(rq, Seq("o_custkey")).join(fq, Seq("o_custkey"))
       .join(mq, Seq("o_custkey"))

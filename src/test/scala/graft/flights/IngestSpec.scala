@@ -278,6 +278,18 @@ class IngestSpec extends SparkTestBase {
     assert(ing.staging.count() == 64 && ing.ledger.count() == 64)
   }
 
+  test("state files are written whole; an unparsable marker reads as absent") {
+    val (ing, csv) = freshRoot("flights_small.csv")
+    val state = Paths.get(s"${ing.stagingPath}/../state").normalize()
+    Files.createDirectories(state)
+    Files.write(state.resolve("flight_inflight"), "0:zero:49:1".getBytes)
+    val r = ing.ingest(csv)
+    assert(r.rowsScanned == 49 && r.rowsLoaded == 49 && ing.offset == 49)
+    // temp-file + rename: no temp or checksum file is left beside them
+    val left = state.toFile.list().toSeq
+    assert(left == Seq("flight_csv_offset"), s"state dir: $left")
+  }
+
   test("directory ingest: per-file offsets, cross-file dedup, idempotent re-run (VERDICT r5 #8)") {
     val root = tmpDir("ingest")
     val dir = s"$root/csvdir"
@@ -331,13 +343,21 @@ class IngestSpec extends SparkTestBase {
 
   test("serial directory ingest: a later file's fresh rows must not wipe earlier staging") {
     // regression: off==0 used to be a STATIC overwrite even under a
-    // per-file state key, so b.csv's first load replaced the whole
-    // staging table (a.csv's partition included)
+    // per-file state key, so a serial batch at offset 0 replaced the
+    // whole staging table (a.csv's partition included). Here the
+    // serial batch at offset 0 is b.csv's shrink reset: replaced in
+    // place by 10 new rows, fewer than its 18-row offset.
     val (ing, _, dir) = disjointDir()
-    val r = ing.ingestDirectory(dir, batchFreshFiles = false)
-    assert(r.rowsScanned == 67 && r.rowsLoaded == 64)
-    assert(ing.staging.count() == 64, "a.csv's staging partition was wiped")
-    assert(ing.ledger.count() == 64)
+    assert(ing.ingestDirectory(dir).rowsLoaded == 64)
+    val b = Files.readAllLines(Paths.get(s"$dir/b.csv"))
+    val replaced = new java.util.ArrayList[String]()
+    replaced.add(b.get(0)) // header
+    for (i <- 1 to 10) replaced.add(s"new$i-" + b.get(i))
+    Files.write(Paths.get(s"$dir/b.csv"), replaced)
+    val r = ing.ingestDirectory(dir)
+    assert(r.rowsScanned == 10 && r.rowsLoaded == 10)
+    assert(ing.staging.count() == 74, "a.csv's staging partition was wiped")
+    assert(ing.ledger.count() == 74)
   }
 
   test("batched directory ingest: one union scan, one seq, same rows as serial") {
