@@ -277,30 +277,9 @@ class FlightIngest(spark: SparkSession, root: String) {
     writeBatchMarker(seq, entries.map(_._2))
     val raw = spark.read.schema(FlightSchemas.rawCsv)
       .option("header", true).csv(entries.map(_._1.getPath.toString): _*)
-    // I-10/I-11 over the union: cross-file duplicates collapse exactly
-    // like cross-time duplicates (identical rows share a hash)
-    val hashed = rowHash(raw).dropDuplicates("row_hash")
-    val freshRows = hashed
-      .join(ledger.select("row_hash"), Seq("row_hash"), "left_anti").cache()
-    val freshCount = try {
-      val n = freshRows.count()
-      if (n > 0) {
-        FlightSchemas.renameToStaging(freshRows.drop("row_hash"))
-          .withColumn("ingest_batch", lit(seq))
-          .write.partitionBy("ingest_batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode(SaveMode.Overwrite).parquet(stagingPath)
-        afterStagingWrite()
-        freshRows.select(col("row_hash"))
-          .withColumn("load_timestamp", current_timestamp())
-          .withColumn("ingest_batch", lit(seq))
-          .write.partitionBy("ingest_batch")
-          .option("partitionOverwriteMode", "dynamic")
-          .mode(SaveMode.Overwrite).parquet(ledgerPath)
-        afterLedgerWrite()
-      }
-      n
-    } finally freshRows.unpersist()
+    // over the union, cross-file duplicates collapse exactly like
+    // cross-time duplicates (identical rows share a hash)
+    val freshCount = commitFresh(raw, seq, replaceStaging = false)
     entries.foreach { case (_, e) => writeOffset(Some(e.key), e.end) }
     clearBatchMarker()
     (IngestResult(entries.map(_._2.end).sum, freshCount, entries.last._2.end),
@@ -375,41 +354,51 @@ class FlightIngest(spark: SparkSession, root: String) {
         spark.createDataFrame(rdd, FlightSchemas.rawCsv)
       }
 
-    // I-10 + intra-batch dedup (identical rows share a hash, so
-    // dropDuplicates on the hash is deterministic in effect).
-    val hashed = rowHash(batch).dropDuplicates("row_hash")
-    // I-11: one distributed anti-join replaces per-chunk IN-probes.
-    val fresh = hashed.join(ledger.select("row_hash"), Seq("row_hash"), "left_anti")
-      .cache()
-    val freshCount = try {
-      val n = fresh.count()
+    // I-7 replace semantics apply to the SINGLETON contract only: in
+    // directory mode (a per-file key) staging holds other files'
+    // partitions, which a static overwrite would silently wipe — a file
+    // replaced in place (shrink reset to offset 0) must land beside
+    // them, not replace them. Consequence: the replaced file keeps its
+    // old rows under their old seqs (same documented residue as the
+    // all-seen shrink reset; V-3 alarms, compaction is the cleanup
+    // path).
+    val freshCount = commitFresh(batch, seq, replaceStaging = off == 0 && key.isEmpty)
+    // I-9: offset advances by rows *scanned* (incl. dupes), as in the
+    // reference (ingestion.py:126: offset + rows_processed).
+    writeOffset(key, end)
+    clearInflight(key)
+    (IngestResult(rowsToProcess, freshCount, end), resume.isDefined)
+  }
 
-      // I-13 rename + I-12 drop helper column, then I-7 staging write.
-      // Staging is touched ONLY when the deduped batch is non-empty,
-      // exactly as the reference skips to_sql for an empty chunk
-      // (ingestion.py:117-119): a fully-committed batch whose retry
-      // recomputes freshCount == 0 leaves staging INTACT and only
-      // advances the offset. Consequence on a shrink-reset whose "new"
-      // file is all already-seen rows: stale staging rows from the
-      // replaced file remain and V-3 alarms on source != staging — the
-      // reference behaves identically there (global-forever ledger).
-      val renamed = FlightSchemas.renameToStaging(fresh.drop("row_hash"))
+  /** The commit body both batch paths share: I-10 row hash and
+    * intra-batch dedup (identical rows share a hash, so dropDuplicates
+    * on it is deterministic in effect), the I-11 ledger anti-join as
+    * one distributed join, then — only for a non-empty result — the
+    * I-7 staging write and the I-8 ledger write, each an overwrite of
+    * batch `seq`'s own partition. `replaceStaging` replaces all of
+    * staging instead (the reference's first-load overwrite). Staging is
+    * touched ONLY when the deduped batch is non-empty, exactly as the
+    * reference skips to_sql for an empty chunk (ingestion.py:117-119):
+    * a fully-committed batch whose retry recomputes 0 fresh rows leaves
+    * staging INTACT and only advances the offset. Consequence on a
+    * shrink-reset whose "new" file is all already-seen rows: stale
+    * staging rows from the replaced file remain and V-3 alarms on
+    * source != staging — the reference behaves identically there
+    * (global-forever ledger). Returns the fresh row count. */
+  private def commitFresh(raw: DataFrame, seq: Long, replaceStaging: Boolean): Long = {
+    val fresh = rowHash(raw).dropDuplicates("row_hash")
+      .join(ledger.select("row_hash"), Seq("row_hash"), "left_anti")
+      .cache()
+    try {
+      val n = fresh.count()
       if (n > 0) {
-        val staged = renamed.withColumn("ingest_batch", lit(seq))
+        // I-13 rename + I-12 drop helper column
+        val staged = FlightSchemas.renameToStaging(fresh.drop("row_hash"))
+          .withColumn("ingest_batch", lit(seq))
           .write.partitionBy("ingest_batch").mode(SaveMode.Overwrite)
-        // I-7 replace semantics apply to the SINGLETON contract only: in
-        // directory mode (a per-file key) staging holds other files'
-        // partitions, which a static overwrite would silently wipe — a
-        // file replaced in place (shrink reset to offset 0) must land
-        // beside them, not replace them. Consequence: the replaced
-        // file keeps its old rows under their old seqs (same documented
-        // residue as the all-seen shrink reset; V-3 alarms, compaction
-        // is the cleanup path).
-        if (off == 0 && key.isEmpty) staged.parquet(stagingPath)
+        if (replaceStaging) staged.parquet(stagingPath)
         else staged.option("partitionOverwriteMode", "dynamic").parquet(stagingPath)
         afterStagingWrite() // crash-injection seam (no-op in production)
-        // I-8: ledger append with load timestamp — as an idempotent
-        // overwrite of this batch's own partition.
         fresh.select(col("row_hash"))
           .withColumn("load_timestamp", current_timestamp())
           .withColumn("ingest_batch", lit(seq))
@@ -420,11 +409,6 @@ class FlightIngest(spark: SparkSession, root: String) {
       }
       n
     } finally fresh.unpersist()
-    // I-9: offset advances by rows *scanned* (incl. dupes), as in the
-    // reference (ingestion.py:126: offset + rows_processed).
-    writeOffset(key, end)
-    clearInflight(key)
-    (IngestResult(rowsToProcess, freshCount, end), resume.isDefined)
   }
 
   /** Crash-injection seams for the IngestSpec torn-commit tests: a

@@ -47,6 +47,9 @@ class StarWarehouse(spark: SparkSession, root: String) {
   def dimAirportsPath: String = s"$root/dim_airports"
   def dimDatePath: String     = s"$root/dim_date"
   def factPath: String        = s"$root/fact_flights"
+  /** The streaming build's applied-batch markers: one empty file per
+    * micro-batch whose fact increment has committed. */
+  def markersDir: String      = s"$root/_applied_batches"
 
   private def readOrEmpty(path: String, schema: StructType): DataFrame =
     if (StarWarehouse.pathExists(spark, path))
@@ -267,7 +270,7 @@ class StarWarehouse(spark: SparkSession, root: String) {
     // re-adds the batch's rows beside the compacted base. Restoring
     // markers first is crash-safe: a marker for a still-live partition
     // is always harmless (it only short-circuits an idempotent rewrite).
-    val markers = new java.io.File(s"$root/_applied_batches")
+    val markers = new java.io.File(markersDir)
     markers.mkdirs()
     increments.foreach(id => new java.io.File(markers, id).createNewFile())
     writeFact(fact.withColumn("ingest_batch", lit(-1L)), tmp.toString)
@@ -275,6 +278,35 @@ class StarWarehouse(spark: SparkSession, root: String) {
     fs.rename(p, bak)
     fs.rename(tmp, p)
     fs.delete(bak, true)
+  }
+
+  /** MARKER-RETENTION RULE (load-bearing once compaction exists): a
+    * marker for batch N may be deleted ONLY while the fact still
+    * carries an `ingest_batch=N` partition — replaying N without its
+    * marker merely dynamic-overwrites that subtree, which is
+    * idempotent. Once [[compactFact]] has folded batch N into the
+    * `ingest_batch=-1` base, the marker is the ONLY thing standing
+    * between a replayed batch N (e.g. after checkpoint loss) and
+    * re-adding its rows BESIDE the compacted copy, so it must be
+    * retained as long as the compacted base lives. This GC implements
+    * exactly that rule; it never deletes a marker whose batch
+    * partition is gone. The rule alone is necessary but not
+    * sufficient: compaction can fold a partition AFTER its marker was
+    * (legitimately) deleted, so [[compactFact]] re-creates the marker
+    * for every batch it folds — the two ops are coupled, and the
+    * GC -> compact -> checkpoint-loss-replay ordering cannot duplicate
+    * rows. Markers are tiny (one empty file per batch), so retaining
+    * the compacted ones forever is cheap; the deletable set is the
+    * uncompacted tail.
+    * Returns (deleted, retained). */
+  def gcMarkers(): (Int, Int) = {
+    val livePartitions = Option(new java.io.File(factPath).listFiles())
+      .getOrElse(Array.empty).filter(_.isDirectory).map(_.getName).toSet
+    val (deletable, retained) =
+      Option(new java.io.File(markersDir).listFiles()).getOrElse(Array.empty)
+        .partition(f => livePartitions.contains(s"ingest_batch=${f.getName}"))
+    deletable.foreach(_.delete())
+    (deletable.length, retained.length)
   }
 
   /** The batch transform stage (T-1..T-13): staging -> cleaned ->

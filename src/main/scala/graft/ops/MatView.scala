@@ -124,13 +124,19 @@ object MatView {
     * distinct incrementally maintainable at all: the state merges by
     * plain addition (a monoid), where the distinct itself does not. */
   private[ops] def distinctState(events: DataFrame): DataFrame =
-    events
+    signedDistinctState(events.withColumn("sign", lit(1L)))
+
+  /** [[distinctState]] of events carrying `sign` ∈ {+1, −1}: each
+    * pair's NET count, pairs that net to zero dropped. */
+  private[ops] def signedDistinctState(signed: DataFrame): DataFrame =
+    signed
       // identified users only: count(DISTINCT) ignores NULL while a
       // groupBy would mint a NULL-user state row — excluded by
       // contract on both sides
       .filter(col("user_id").isNotNull)
       .groupBy(col("event_type"), col("user_id"))
-      .agg(count(lit(1)).as("n"))
+      .agg(sum(col("sign")).as("n"))
+      .filter(col("n") =!= 0L)
 
   /** The served view over a merged state: exact distinct users and
     * event totals per type. */
@@ -612,22 +618,16 @@ class DistinctViewStore(spark: SparkSession, path: String)
 
   /** Aggregate `events` into partial state and commit as round
     * `round`; `negate` retracts the batch instead of adding it. */
-  def appendRound(events: DataFrame, round: Long, negate: Boolean = false): Unit = {
-    val st = MatView.distinctState(events)
-    commitRound(if (negate) st.withColumn("n", -col("n")) else st, round)
-  }
+  def appendRound(events: DataFrame, round: Long, negate: Boolean = false): Unit =
+    appendSignedRound(events.withColumn("sign", lit(if (negate) -1L else 1L)), round)
 
   /** Commit one MIXED batch: `signed` carries (event_type, user_id,
     * sign ∈ {+1, −1}) rows — per-row adds and retractions folded into
     * a single round partition (the CDC-shaped entry point
     * [[graft.streaming.StreamingDistinctExact]] uses, where one
     * micro-batch legitimately interleaves both). */
-  def appendSignedRound(signed: DataFrame, round: Long): Unit = {
-    commitRound(signed
-      .filter(col("user_id").isNotNull) // distinctState's identified-user contract
-      .groupBy(col("event_type"), col("user_id"))
-      .agg(sum(col("sign")).as("n")), round)
-  }
+  def appendSignedRound(signed: DataFrame, round: Long): Unit =
+    commitRound(MatView.signedDistinctState(signed), round)
 
   /** Stored state merged with an uncommitted delta's own state. */
   def mergedWith(deltaEvents: DataFrame, beforeRound: Option[Long] = None): DataFrame =

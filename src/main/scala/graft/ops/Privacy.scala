@@ -183,12 +183,23 @@ object Privacy {
     * classes' counts, so the whole ladder derives from |classes|
     * state rows. */
   private[ops] def classState(cust: DataFrame): DataFrame =
-    cust.select(col("c_mktsegment").as("segment"),
+    signedClassState(cust.withColumn("sign", lit(1L)))
+
+  /** Width of a class's balance band, in cents; [[ClassCountStore]]
+    * pins it in its layout. */
+  private[ops] val classBandCents = 100000
+
+  /** [[classState]] of customer rows carrying `sign` ∈ {+1, −1}: each
+    * class's NET count, classes that net to zero dropped. */
+  private[ops] def signedClassState(signed: DataFrame): DataFrame =
+    signed.select(col("c_mktsegment").as("segment"),
         col("c_nationkey").as("nation"),
-        expr("cast(cast(c_acctbal as decimal(18,2)) * 100 as bigint) div 100000")
-          .as("band"))
+        expr(s"cast(cast(c_acctbal as decimal(18,2)) * 100 as bigint) div $classBandCents")
+          .as("band"),
+        col("sign"))
       .groupBy(col("segment"), col("nation"), col("band"))
-      .agg(count(lit(1)).as("n"))
+      .agg(sum(col("sign")).as("n"))
+      .filter(col("n") =!= 0L)
 
   /** The q203 ladder served from class-count state: every level
     * re-aggregates the |classes|-bounded state rows, never customers. */
@@ -879,30 +890,20 @@ class ClassCountStore(spark: SparkSession, path: String)
     * ladder re-definition against a standing store fails loudly
     * instead of merging incomparable classes (VERDICT r13 #3). */
   override protected def layoutMeta: Map[String, String] =
-    Map("quasi" -> "segment:nation:band", "band_width_cents" -> "100000")
+    Map("quasi" -> "segment:nation:band",
+      "band_width_cents" -> Privacy.classBandCents.toString)
 
   /** Fold `cust` rows into class counts and commit as round `round`;
     * `negate` retracts the batch (the erasure path). */
-  def appendRound(cust: DataFrame, round: Long, negate: Boolean = false): Unit = {
-    val st = Privacy.classState(cust)
-    commitRound(if (negate) st.withColumn("n", -col("n")) else st, round)
-  }
+  def appendRound(cust: DataFrame, round: Long, negate: Boolean = false): Unit =
+    appendSignedRound(cust.withColumn("sign", lit(if (negate) -1L else 1L)), round)
 
   /** Commit one MIXED batch: customer rows carrying `sign` ∈ {+1, −1}
     * (arrivals and departures in the same trigger — the CDC-shaped
     * entry point [[graft.streaming.StreamingKAnonymity]] uses), folded
     * to one NET class-count round. */
-  def appendSignedRound(signed: DataFrame, round: Long): Unit = {
-    val st = signed.select(col("c_mktsegment").as("segment"),
-        col("c_nationkey").as("nation"),
-        expr("cast(cast(c_acctbal as decimal(18,2)) * 100 as bigint) div 100000")
-          .as("band"),
-        col("sign"))
-      .groupBy(col("segment"), col("nation"), col("band"))
-      .agg(sum(col("sign")).as("n"))
-      .filter(col("n") =!= 0L)
-    commitRound(st, round)
-  }
+  def appendSignedRound(signed: DataFrame, round: Long): Unit =
+    commitRound(Privacy.signedClassState(signed), round)
 
   /** Stored state merged with an uncommitted delta's own state. */
   def mergedWith(deltaCust: DataFrame, beforeRound: Option[Long] = None): DataFrame =

@@ -17,8 +17,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * `StreamingQueryProgress` object the engine emits after each batch;
   * reading them from inside foreachBatch would race the batch that
   * produces them. The listener is the supported post-commit hook, it
-  * observes EVERY query on the session (the audited pipelines name
-  * themselves via `queryName` so lines are attributable), and it adds
+  * observes EVERY query on the session (every [[RoundStream]] pipeline
+  * is named, so lines are attributable), and it adds
   * zero work to the hot path — serialization happens on the driver's
   * listener bus thread.
   *

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.ops.{Boilerplate, BoilerplateStore}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** The streaming half of incremental boilerplate removal: documents
   * arrive as parquet files, and every micro-batch (1) cuts its
@@ -54,12 +54,8 @@ object StreamingBoilerplate {
     * `cleanedDir` and maintaining the frequency store at `storePath`. */
   def start(spark: SparkSession, docsDir: String, storePath: String,
             cleanedDir: String, checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(StreamingNearDup.docSchema).parquet(docsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath, cleanedDir)
-      }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    RoundStream.drain(spark, StreamingNearDup.docSchema, docsDir, checkpointDir,
+        "graft_boilerplate_stream") {
+      processBatch(_, _, storePath, cleanedDir)
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.{CdcSnapshotStore, CoPairStore, Graphs, OrderLedgerStore}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming incremental connected components (the 17th pipeline):
@@ -58,10 +58,10 @@ object StreamingCc {
     labelStore(spark, labelPath).state(beforeRound)
       .select(col("doc_id"), col("comp"))
 
-  /** One micro-batch: advance both stores to round
-    * `roundOffset + batchId`. Deterministic in (batch, batchId). */
+  /** One micro-batch: advance both stores to round `batchId`.
+    * Deterministic in (batch, batchId). */
   def processBatch(batch: DataFrame, batchId: Long, pairPath: String,
-                   labelPath: String, roundOffset: Long = 0L): Unit =
+                   labelPath: String): Unit =
     // the batch registers persisted frames (delta counts, quotient
     // edges, base labels); release them at the batch boundary — the
     // Bench/Verify per-query discipline, applied per micro-batch, or a
@@ -70,13 +70,12 @@ object StreamingCc {
     // registered — draining the global queue would unpersist caches a
     // concurrent query in the same session still has in flight.
     graft.ops.Dedup.withSketchScope {
-      processBatchInner(batch, batchId, pairPath, labelPath, roundOffset)
+      processBatchInner(batch, batchId, pairPath, labelPath)
     }
 
-  private def processBatchInner(batch: DataFrame, batchId: Long, pairPath: String,
-                                labelPath: String, roundOffset: Long): Unit = {
+  private def processBatchInner(batch: DataFrame, round: Long, pairPath: String,
+                                labelPath: String): Unit = {
     val spark = batch.sparkSession
-    val round = roundOffset + batchId
     // exact order-disjointness guard (see the object doc): fails the
     // batch BEFORE any state advances, so a violating trigger leaves
     // both stores untouched
@@ -117,15 +116,8 @@ object StreamingCc {
   /** Drain everything currently in `itemsDir` into the two stores
     * (one round per micro-batch). */
   def start(spark: SparkSession, itemsDir: String, pairPath: String,
-            labelPath: String, checkpointDir: String,
-            roundOffset: Long = 0L): StreamingQuery =
-    spark.readStream.schema(itemSchema).parquet(itemsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, pairPath, labelPath, roundOffset)
-      }
-      .queryName("graft_cc_stream")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+            labelPath: String, checkpointDir: String): StreamingQuery =
+    RoundStream.drain(spark, itemSchema, itemsDir, checkpointDir, "graft_cc_stream") {
+      processBatch(_, _, pairPath, labelPath)
+    }
 }

@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.ops.CdcSnapshotStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming CDC apply (the 13th pipeline): changelog rows (upserts +
@@ -37,26 +37,19 @@ object StreamingCdc {
 
   val key: Seq[String] = Seq("user_id")
 
-  /** One micro-batch: compact + commit as round `roundOffset + batchId`.
-    * Public and deterministic in (batch, batchId) so the replay
-    * contract is directly testable. */
-  def processBatch(batch: DataFrame, batchId: Long, storePath: String,
-                   roundOffset: Long = 0L): Unit =
+  /** One micro-batch: compact + commit as round `batchId`. Public and
+    * deterministic in (batch, batchId) so the replay contract is
+    * directly testable. */
+  def processBatch(batch: DataFrame, batchId: Long, storePath: String): Unit =
     new CdcSnapshotStore(batch.sparkSession, storePath, key, "ts", "event_id")
-      .appendRound(batch, round = roundOffset + batchId)
+      .appendRound(batch, round = batchId)
 
   /** Drain everything currently in `logDir` (one AvailableNow run =
     * one snapshot round per micro-batch) into the store at
     * `storePath`. */
   def start(spark: SparkSession, logDir: String, storePath: String,
-            checkpointDir: String, roundOffset: Long = 0L): StreamingQuery =
-    spark.readStream.schema(logSchema).parquet(logDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath, roundOffset)
-      }
-      .queryName("graft_cdc_stream")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+            checkpointDir: String): StreamingQuery =
+    RoundStream.drain(spark, logSchema, logDir, checkpointDir, "graft_cdc_stream") {
+      processBatch(_, _, storePath)
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.HllDistinctStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** The streaming half of q93's incremental distinct counting: events
@@ -39,17 +39,10 @@ object StreamingDistinct {
     * at `storePath` (one AvailableNow run, one round per batch). */
   def start(spark: SparkSession, eventsDir: String, storePath: String,
             checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(eventSchema).parquet(eventsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath)
-      }
-      // named so a session-level StreamAudit can attribute its
-      // per-batch lines to this pipeline
-      .queryName("graft_distinct_stream")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    RoundStream.drain(spark, eventSchema, eventsDir, checkpointDir,
+        "graft_distinct_stream") {
+      processBatch(_, _, storePath)
+    }
 
   /** The live read: distinct-user estimates per event type from the
     * stored sketches alone. */

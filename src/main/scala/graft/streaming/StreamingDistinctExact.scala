@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.DistinctViewStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming EXACT distinct counting under deletes (the 16th
@@ -43,31 +43,21 @@ object StreamingDistinctExact {
     StructField("op", StringType)))
 
   /** One micro-batch: signed per-pair partials committed as round
-    * `roundOffset + batchId`. Deterministic in (batch, batchId); a
-    * NULL or unknown op fails the batch loudly (a silently-skipped
-    * row would be an unexplained drift in an EXACT view). */
-  def processBatch(batch: DataFrame, batchId: Long, storePath: String,
-                   roundOffset: Long = 0L): Unit = {
+    * `batchId`. Deterministic in (batch, batchId); a NULL or unknown
+    * op fails the batch loudly ([[RoundStream.sign]]). */
+  def processBatch(batch: DataFrame, batchId: Long, storePath: String): Unit = {
     val signed = batch.select(col("event_type"), col("user_id"),
-      when(col("op") === "add", 1L)
-        .when(col("op") === "retract", -1L)
-        .otherwise(raise_error(concat(lit("unknown op in exact-distinct stream: "),
-          coalesce(col("op"), lit("NULL"))))).as("sign"))
+      RoundStream.sign(col("op"), "exact-distinct").as("sign"))
     new DistinctViewStore(batch.sparkSession, storePath)
-      .appendSignedRound(signed, round = roundOffset + batchId)
+      .appendSignedRound(signed, round = batchId)
   }
 
   /** Drain everything currently in `eventsDir` into the view state at
     * `storePath` (one signed state round per micro-batch). */
   def start(spark: SparkSession, eventsDir: String, storePath: String,
-            checkpointDir: String, roundOffset: Long = 0L): StreamingQuery =
-    spark.readStream.schema(eventSchema).parquet(eventsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath, roundOffset)
-      }
-      .queryName("graft_distinct_exact_stream")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+            checkpointDir: String): StreamingQuery =
+    RoundStream.drain(spark, eventSchema, eventsDir, checkpointDir,
+        "graft_distinct_exact_stream") {
+      processBatch(_, _, storePath)
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.ExtremeBufferStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming exact-extremes maintenance (the 20th pipeline): event
@@ -49,12 +49,8 @@ object StreamingExtremes {
     * single pass. Deterministic in (batch, batchId). */
   def processBatch(batch: DataFrame, batchId: Long, storePath: String,
                    roundOffset: Long = 0L): Unit = {
-    val signed = batch.select(
-      col("event_type"), col("value"),
-      when(col("op") === "add", 1L)
-        .when(col("op") === "retract", -1L)
-        .otherwise(raise_error(concat(lit("unknown op in extremes stream: "),
-          coalesce(col("op"), lit("NULL"))))).as("sign"))
+    val signed = batch.select(col("event_type"), col("value"),
+      RoundStream.sign(col("op"), "extremes").as("sign"))
     new ExtremeBufferStore(batch.sparkSession, storePath)
       .appendSignedRound(signed, roundOffset + batchId)
   }
@@ -62,13 +58,8 @@ object StreamingExtremes {
   /** Drain everything currently in `eventsDir` into the buffer store. */
   def start(spark: SparkSession, eventsDir: String, storePath: String,
             checkpointDir: String, roundOffset: Long = 0L): StreamingQuery =
-    spark.readStream.schema(eventSchema).parquet(eventsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath, roundOffset)
-      }
-      .queryName("graft_extremes_stream")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    RoundStream.drain(spark, eventSchema, eventsDir, checkpointDir,
+        "graft_extremes_stream") {
+      processBatch(_, _, storePath, roundOffset)
+    }
 }

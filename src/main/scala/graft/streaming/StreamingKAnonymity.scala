@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.ClassCountStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming k-anonymity maintenance (the 19th pipeline): customer
@@ -33,31 +33,21 @@ object StreamingKAnonymity {
     StructField("op", StringType)))
 
   /** One micro-batch: NET signed class counts committed as round
-    * `roundOffset + batchId` — one batch may legitimately interleave
-    * departures and arrivals (the CDC shape), folded in a single
-    * pass. Deterministic in (batch, batchId). */
-  def processBatch(batch: DataFrame, batchId: Long, storePath: String,
-                   roundOffset: Long = 0L): Unit = {
+    * `batchId` — one batch may legitimately interleave departures and
+    * arrivals (the CDC shape), folded in a single pass. Deterministic
+    * in (batch, batchId). */
+  def processBatch(batch: DataFrame, batchId: Long, storePath: String): Unit = {
     val signed = batch.select(
       col("c_mktsegment"), col("c_nationkey"), col("c_acctbal"),
-      when(col("op") === "add", 1L)
-        .when(col("op") === "retract", -1L)
-        .otherwise(raise_error(concat(lit("unknown op in k-anonymity stream: "),
-          coalesce(col("op"), lit("NULL"))))).as("sign"))
+      RoundStream.sign(col("op"), "k-anonymity").as("sign"))
     new ClassCountStore(batch.sparkSession, storePath)
-      .appendSignedRound(signed, roundOffset + batchId)
+      .appendSignedRound(signed, batchId)
   }
 
   /** Drain everything currently in `custDir` into the class store. */
   def start(spark: SparkSession, custDir: String, storePath: String,
-            checkpointDir: String, roundOffset: Long = 0L): StreamingQuery =
-    spark.readStream.schema(custSchema).parquet(custDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath, roundOffset)
-      }
-      .queryName("graft_kanon_stream")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+            checkpointDir: String): StreamingQuery =
+    RoundStream.drain(spark, custSchema, custDir, checkpointDir, "graft_kanon_stream") {
+      processBatch(_, _, storePath)
+    }
 }

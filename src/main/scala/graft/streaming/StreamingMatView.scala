@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.ops.MatViewStore
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming materialized-view refresh (the 14th pipeline): document
@@ -33,23 +33,16 @@ object StreamingMatView {
     StructField("n_chars", LongType)))
 
   /** One micro-batch: aggregate to partial state + commit as round
-    * `roundOffset + batchId`. Deterministic in (batch, batchId). */
-  def processBatch(batch: DataFrame, batchId: Long, storePath: String,
-                   roundOffset: Long = 0L): Unit =
+    * `batchId`. Deterministic in (batch, batchId). */
+  def processBatch(batch: DataFrame, batchId: Long, storePath: String): Unit =
     new MatViewStore(batch.sparkSession, storePath)
-      .appendRound(batch, round = roundOffset + batchId)
+      .appendRound(batch, round = batchId)
 
   /** Drain everything currently in `docsDir` into the view state at
     * `storePath` (one state round per micro-batch). */
   def start(spark: SparkSession, docsDir: String, storePath: String,
-            checkpointDir: String, roundOffset: Long = 0L): StreamingQuery =
-    spark.readStream.schema(docSchema).parquet(docsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath, roundOffset)
-      }
-      .queryName("graft_matview_stream")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+            checkpointDir: String): StreamingQuery =
+    RoundStream.drain(spark, docSchema, docsDir, checkpointDir, "graft_matview_stream") {
+      processBatch(_, _, storePath)
+    }
 }

@@ -1,9 +1,9 @@
 package graft.streaming
 
 import graft.ops.NearDupIndexStore
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** The streaming half of incremental near-dup: documents arrive as
@@ -82,15 +82,7 @@ object StreamingNearDup {
     * `pairsDir` and maintaining the index at `storePath`. */
   def start(spark: SparkSession, docsDir: String, storePath: String,
             pairsDir: String, checkpointDir: String): StreamingQuery =
-    spark.readStream.schema(docSchema).parquet(docsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath, pairsDir)
-      }
-      // named so a session-level StreamAudit can attribute its
-      // per-batch lines to this pipeline
-      .queryName("graft_neardup_stream")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+    RoundStream.drain(spark, docSchema, docsDir, checkpointDir, "graft_neardup_stream") {
+      processBatch(_, _, storePath, pairsDir)
+    }
 }

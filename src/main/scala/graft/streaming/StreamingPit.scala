@@ -2,7 +2,7 @@ package graft.streaming
 
 import graft.ops.{RoundPartitions, Scd}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** Streaming point-in-time enrichment (the 15th pipeline): fact rows
@@ -41,28 +41,21 @@ object StreamingPit {
   val attrs: Seq[String] = Seq("band")
 
   /** One micro-batch: enrich against the versions at `versionsPath`
-    * (user_id, ts, event_id, band) and commit as round
-    * `roundOffset + batchId`. Deterministic in (batch, batchId). */
+    * (user_id, ts, event_id, band) and commit as round `batchId`.
+    * Deterministic in (batch, batchId). */
   def processBatch(batch: DataFrame, batchId: Long, versionsPath: String,
-                   outPath: String, roundOffset: Long = 0L): Unit = {
+                   outPath: String): Unit = {
     val spark = batch.sparkSession
     val versions = spark.read.parquet(versionsPath)
     val enriched = Scd.pitJoin(versions, batch, key, attrs, "ts", "event_id")
-    RoundPartitions.commit(enriched, outPath, roundOffset + batchId)
+    RoundPartitions.commit(enriched, outPath, batchId)
   }
 
   /** Drain everything currently in `factsDir` (one enriched round per
     * micro-batch) into `outPath`. */
   def start(spark: SparkSession, factsDir: String, versionsPath: String,
-            outPath: String, checkpointDir: String,
-            roundOffset: Long = 0L): StreamingQuery =
-    spark.readStream.schema(factSchema).parquet(factsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, versionsPath, outPath, roundOffset)
-      }
-      .queryName("graft_pit_stream")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+            outPath: String, checkpointDir: String): StreamingQuery =
+    RoundStream.drain(spark, factSchema, factsDir, checkpointDir, "graft_pit_stream") {
+      processBatch(_, _, versionsPath, outPath)
+    }
 }

@@ -3,7 +3,7 @@ package graft.streaming
 import graft.ops.{PqIndexStore, Similarity}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.types._
 
 /** The streaming half of incremental PQ indexing (NOTES r10 #2, the
@@ -23,9 +23,8 @@ import org.apache.spark.sql.types._
   * at-least-once, and the round commit is a dynamic-partition
   * OVERWRITE keyed on the deterministic streaming batchId — a
   * re-delivered batch REPLACES its own round instead of appending a
-  * second copy. Rounds are offset by `roundOffset` (default 1) so
-  * streamed rounds land AFTER the batch-built base round 0, exactly
-  * the q31e layout.
+  * second copy. Streamed rounds start at `firstStreamRound`, so they
+  * land AFTER the batch-built base round 0, exactly the q31e layout.
   *
   * PRECONDITION: the store must exist with books written (create it
   * with `writeBooks` + a base `appendRound`, or run q31e once); a
@@ -43,11 +42,13 @@ object StreamingPq {
     StructField("embedding", ArrayType(FloatType)),
     StructField("label", IntegerType)))
 
+  /** Round 0 is the batch-built base index. */
+  private val firstStreamRound: Long = 1L
+
   /** One micro-batch: encode with the FROZEN stored books, commit as
-    * round `roundOffset + batchId`. Public and deterministic in
+    * round `firstStreamRound + batchId`. Public and deterministic in
     * (batch, batchId) so the replay contract is directly testable. */
-  def processBatch(batch: DataFrame, batchId: Long, storePath: String,
-                   roundOffset: Long = 1L): Unit = {
+  def processBatch(batch: DataFrame, batchId: Long, storePath: String): Unit = {
     val spark = batch.sparkSession
     val store = new PqIndexStore(spark, storePath)
     val books =
@@ -76,23 +77,15 @@ object StreamingPq {
         lit(") — fix the upstream schema; the index encodes nothing from this batch"))))
     store.appendRound(
       batch.select(col("vec_id"), code.as("code")),
-      round = roundOffset + batchId)
+      round = firstStreamRound + batchId)
   }
 
   /** Drain everything currently in `vecsDir` (one AvailableNow run =
     * one index round per micro-batch) into the PQ store at
     * `storePath`. */
   def start(spark: SparkSession, vecsDir: String, storePath: String,
-            checkpointDir: String, roundOffset: Long = 1L): StreamingQuery =
-    spark.readStream.schema(vecSchema).parquet(vecsDir)
-      .writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        processBatch(batch, batchId, storePath, roundOffset)
-      }
-      // named so a session-level StreamAudit can attribute its
-      // per-batch lines to this pipeline
-      .queryName("graft_pq_stream")
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
+            checkpointDir: String): StreamingQuery =
+    RoundStream.drain(spark, vecSchema, vecsDir, checkpointDir, "graft_pq_stream") {
+      processBatch(_, _, storePath)
+    }
 }

@@ -1,8 +1,8 @@
 package graft.streaming
 
-import graft.flights.{Cleaning, StarWarehouse}
+import graft.flights.{Cleaning, FlightSchemas, StarWarehouse}
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Continuous star-schema maintenance: the streaming counterpart of
   * the batch transform. Each micro-batch of freshly-staged rows is
@@ -25,9 +25,11 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   *    batch N's subtree instead of appending a second copy — the
   *    crash-between-append-and-marker window VERDICT r1 flagged is
   *    gone because correctness no longer depends on the marker;
-  *  - the per-batch marker file remains as a skip-fast-path so a
-  *    replayed, fully-applied batch costs a file stat instead of a
-  *    join pass.
+  *  - the per-batch marker file ([[StarWarehouse.markersDir]]) remains
+  *    as a skip-fast-path so a replayed, fully-applied batch costs a
+  *    file stat instead of a join pass. Its retention rule, and its
+  *    coupling to compaction, live beside [[StarWarehouse.compactFact]]
+  *    in [[StarWarehouse.gcMarkers]].
   *
   * At 100 TB this replaces the reference's daily full-table transform:
   * dims converge incrementally and only new facts are written per
@@ -39,58 +41,19 @@ object StreamingStarBuild {
   def start(spark: SparkSession, stagingDir: String, warehouseRoot: String,
             checkpointDir: String): StreamingQuery = {
     val wh = new StarWarehouse(spark, warehouseRoot)
-    val markers = new java.io.File(s"$warehouseRoot/_applied_batches")
+    val markers = new java.io.File(wh.markersDir)
     markers.mkdirs()
-    val staged = spark.readStream
-      .schema(graft.flights.FlightSchemas.staging)
-      .parquet(stagingDir)
-    staged.writeStream
-      .foreachBatch { (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        val marker = new java.io.File(markers, batchId.toString)
-        if (!marker.exists()) { // replayed, already-applied batch: skip
-          val cleaned = Cleaning.clean(batch).cache()
-          try {
-            val (airlines, airports, _) = wh.upsertDimsFor(cleaned)
-            wh.commitFactIncrement(batchId, wh.factRowsFor(cleaned, airlines, airports))
-            marker.createNewFile()
-          } finally cleaned.unpersist()
-        }
-        ()
+    RoundStream.drain(spark, FlightSchemas.staging, stagingDir, checkpointDir,
+        "graft_star_stream") { (batch, batchId) =>
+      val marker = new java.io.File(markers, batchId.toString)
+      if (!marker.exists()) { // replayed, already-applied batch: skip
+        val cleaned = Cleaning.clean(batch).cache()
+        try {
+          val (airlines, airports, _) = wh.upsertDimsFor(cleaned)
+          wh.commitFactIncrement(batchId, wh.factRowsFor(cleaned, airlines, airports))
+          marker.createNewFile()
+        } finally cleaned.unpersist()
       }
-      .option("checkpointLocation", checkpointDir)
-      .trigger(Trigger.AvailableNow())
-      .start()
-  }
-
-  /** MARKER-RETENTION RULE (load-bearing once compaction exists): a
-    * marker for batch N may be deleted ONLY while the fact still
-    * carries an `ingest_batch=N` partition — replaying N without its
-    * marker merely dynamic-overwrites that subtree, which is
-    * idempotent. Once [[graft.flights.StarWarehouse.compactFact]] has
-    * folded batch N into the `ingest_batch=-1` base, the marker is
-    * the ONLY thing standing between a replayed batch N (e.g. after
-    * checkpoint loss) and re-adding its rows BESIDE the compacted
-    * copy, so it must be retained as long as the compacted base
-    * lives. This GC implements exactly that rule; it never deletes a
-    * marker whose batch partition is gone. The rule alone is necessary
-    * but not sufficient: compaction can fold a partition AFTER its
-    * marker was (legitimately) deleted, so
-    * [[graft.flights.StarWarehouse.compactFact]] re-creates the marker
-    * for every batch it folds — the two ops are coupled, and the
-    * GC -> compact -> checkpoint-loss-replay ordering cannot duplicate
-    * rows. Markers are tiny (one empty file per batch), so retaining
-    * the compacted ones forever is cheap; the deletable set is the
-    * uncompacted tail.
-    * Returns (deleted, retained). */
-  def gcMarkers(warehouseRoot: String): (Int, Int) = {
-    val markers = new java.io.File(s"$warehouseRoot/_applied_batches")
-    val factDir = new java.io.File(s"$warehouseRoot/fact_flights")
-    val livePartitions = Option(factDir.listFiles()).getOrElse(Array.empty)
-      .filter(_.isDirectory).map(_.getName).toSet
-    val (deletable, retained) =
-      Option(markers.listFiles()).getOrElse(Array.empty)
-        .partition(f => livePartitions.contains(s"ingest_batch=${f.getName}"))
-    deletable.foreach(_.delete())
-    (deletable.length, retained.length)
+    }
   }
 }

@@ -114,7 +114,7 @@ class StreamingStarBuildSpec extends SparkTestBase {
     // BEFORE compaction ingest_batch=0 still exists: its marker is
     // replay-safe to drop (dynamic overwrite is idempotent), so GC
     // may delete it...
-    val (deleted0, retained0) = StreamingStarBuild.gcMarkers(s"$root/wh")
+    val (deleted0, retained0) = wh.gcMarkers()
     assert(deleted0 == 1 && retained0 == 0)
     // ...and a marker-less replay (fresh checkpoint) rewrites the
     // batch-0 subtree instead of duplicating it.
@@ -126,7 +126,7 @@ class StreamingStarBuildSpec extends SparkTestBase {
     // AFTER compaction the partition is gone: the marker is
     // load-bearing and GC must retain it.
     wh.compactFact()
-    val (deleted1, retained1) = StreamingStarBuild.gcMarkers(s"$root/wh")
+    val (deleted1, retained1) = wh.gcMarkers()
     assert(deleted1 == 0 && retained1 == 1,
       "GC deleted a compacted batch's marker — replay would resurrect rows")
 
@@ -155,7 +155,7 @@ class StreamingStarBuildSpec extends SparkTestBase {
       .awaitTermination()
 
     // 1. GC: batch 0's partition is live, so its marker is deletable.
-    val (deleted, _) = StreamingStarBuild.gcMarkers(s"$root/wh")
+    val (deleted, _) = wh.gcMarkers()
     assert(deleted == 1 && !Files.exists(Paths.get(s"$root/wh/_applied_batches/0")))
     // 2. Compaction folds ingest_batch=0 — and must restore its marker.
     wh.compactFact()
