@@ -1138,17 +1138,18 @@ object Dedup {
   /** Min-label connected components with an adaptive execution path
     * (r16, guide §3 "pick the strategy deliberately" applied to the
     * iterative-propagation operator): when the edge list fits the
-    * driver (≤ [[fusedMaxEdges]]), ONE collect + an in-memory
-    * union-find replaces the whole O(diameter)-round checkpointed
-    * propagation loop — the labels come back as a driver-built
-    * mapping, so a delta-bounded graph (q211's quotient, q179's
-    * support-2 universe) pays one job instead of 2 + rounds
-    * localCheckpoint jobs. Past the cap the distributed
-    * [[dupKeepers]] loop runs unchanged. Values are identical by
-    * construction (union-find attaching the larger root under the
-    * smaller IS min-label closure — the DedupSpec property test's
-    * own reference algorithm, now pinned against dupKeepers in
-    * GraphsSpec for this path too).
+    * driver (≤ [[fusedMaxEdges]]), ONE `limit(cap + 1)` collect
+    * (it both sizes and fetches the edges: no count job, no cache)
+    * plus an in-memory union-find replaces the whole O(diameter)-round
+    * checkpointed propagation loop — the labels come back as a
+    * driver-built mapping, so a delta-bounded graph (q211's quotient,
+    * q179's support-2 universe) pays one collect instead of 2 + rounds
+    * localCheckpoint jobs. Past the cap the edges are computed again
+    * and cached, and the distributed [[dupKeepers]] loop runs
+    * unchanged. Values are identical by construction (union-find
+    * attaching the larger root under the smaller IS min-label
+    * closure — the DedupSpec property test's own reference algorithm,
+    * now pinned against dupKeepers in GraphsSpec for this path too).
     *
     * `docs = None` labels only the edge ENDPOINTS (the q179/quotient
     * shape, where nodes are defined as endpoints — skips the
@@ -1161,9 +1162,10 @@ object Dedup {
   private[graft] def keeperLabels(docs: Option[DataFrame],
                                   pairs: DataFrame): DataFrame = {
     val spark = pairs.sparkSession
-    val p = persistSketch(pairs.select(col("doc_a"), col("doc_b")))
-    val nEdges = p.count()
-    if (nEdges <= fusedMaxEdges(spark)) {
+    val edges = pairs.select(col("doc_a"), col("doc_b"))
+    val cap = fusedMaxEdges(spark)
+    val collected = edges.limit(math.min(cap + 1, Int.MaxValue).toInt).collect()
+    if (collected.length <= cap) {
       val parent = new java.util.HashMap[java.lang.Long, java.lang.Long]()
       def find(x0: Long): Long = {
         var x = x0
@@ -1177,7 +1179,7 @@ object Dedup {
         }
         x
       }
-      p.collect().foreach { r =>
+      collected.foreach { r =>
         val (ra, rb) = (find(r.getLong(0)), find(r.getLong(1)))
         if (ra != rb) {
           if (ra < rb) parent.put(rb, ra) else parent.put(ra, rb)
@@ -1200,6 +1202,7 @@ object Dedup {
           .select(col("doc_id"), coalesce(col("_k"), col("doc_id")).as("keeper"))
       }
     } else {
+      val p = persistSketch(edges)
       val nodes = docs.getOrElse(
         p.select(col("doc_a").as("doc_id"))
           .unionByName(p.select(col("doc_b").as("doc_id"))).distinct())

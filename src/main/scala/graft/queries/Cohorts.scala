@@ -352,10 +352,12 @@ object Cohorts {
     * (mask, n_users) frame bounded by min(2^|types|, |users|). Bit
     * positions are minted alphabetically so both the exact frontier
     * and the greedy cover (and their DuckDB twins) agree on subset
-    * identity. Long masks cap the machinery at 63 types; past that the
-    * same recurrences run on (user, type) pairs directly. */
+    * identity. Long masks hold 64 types; past that a shift wraps and
+    * two types would share a bit, so the histogram refuses. */
   private def maskHistogram(s: SparkSession, d: String,
                             typeList: Array[String]): DataFrame = {
+    require(typeList.length <= 64,
+      s"type bitmasks are longs: |types|=${typeList.length} > 64")
     val spark = s
     import spark.implicits._
     val typeIdx = typeList.zipWithIndex.toSeq.toDF("event_type", "idx")
@@ -371,6 +373,12 @@ object Cohorts {
     * steps its twin unrolls — the q186 static-generation pairing). */
   val greedyCoverSteps = 5
 
+  /** Byte cap on the mask histogram q195 collects to the driver: 16
+    * bytes a (mask, n) row, so 16 MB holds the whole 2^20-row lattice
+    * of q185's largest type domain — the same broadcast-feasibility
+    * class as [[graft.ops.Dedup]]'s fused edge cap. */
+  val greedyDriverBytes = 16L << 20
+
   /** q195 — GREEDY set cover: the scalable escape hatch the q185
     * guard names. The exact frontier is 2^|types| by construction;
     * the greedy recurrence — repeatedly add the type with the largest
@@ -379,15 +387,23 @@ object Cohorts {
     * guarantee per prefix size, which CohortsSpec asserts against the
     * exact frontier alongside an independent driver replay.
     *
-    * Scale shape: the histogram is built once (the only data-sized
-    * work) and cached; each round is ONE map-combined conditional agg
-    * over it (|candidates| sums in a single row — no shuffle, no
-    * cross join), and only that one row is collected per round — the
-    * q83/q154 domain-bounded-collect discipline. Works untouched at
-    * 40+ types where q185 must refuse. The DuckDB twin runs the same
-    * greedy as [[greedyCoverSteps]] chained single-row CTEs with the
-    * identical (cov DESC, name ASC) tie-break. */
-  val greedyCover: Q = (s, d) => {
+    * Scale shape: the histogram (the only data-sized work) has at
+    * most min(2^|types|, |users|) rows, and ONE `limit(cap + 1)`
+    * query collects it when it fits [[greedyDriverBytes]]; the steps
+    * then run on the driver, one pass over the collected rows each.
+    * Past the cap the histogram is built again and cached (the probe
+    * collect's work is not reused), and each step is ONE
+    * map-combined conditional agg over it (|candidates| sums in a
+    * single row, no shuffle), one row collected per step — the
+    * q83/q154 domain-bounded-collect discipline. Both paths share the
+    * argmax and its (cov DESC, name ASC) tie-break, and work up to
+    * the histogram's 64 types, where q185 refuses past 20. The DuckDB
+    * twin runs the same greedy as [[greedyCoverSteps]] chained
+    * single-row CTEs. */
+  val greedyCover: Q = (s, d) => greedyCoverOf(s, d)
+
+  private[graft] def greedyCoverOf(s: SparkSession, d: String,
+                                   driverBytes: Long = greedyDriverBytes): DataFrame = {
     val spark = s
     import spark.implicits._
     val typeList = Tables.events(s, d).select(col("event_type")).distinct()
@@ -396,27 +412,49 @@ object Cohorts {
       spark.range(0).select(col("id").cast("int").as("step"),
         lit("").as("chosen_type"), col("id").as("covered"))
     } else {
-      val hist = graft.ops.Dedup.materializedSketch(
-        maskHistogram(s, d, typeList))
+      val hist = maskHistogram(s, d, typeList)
+      val capRows = driverBytes / 16
+      val rows = hist.limit(math.min(capRows + 1, Int.MaxValue).toInt).collect()
       val steps = math.min(greedyCoverSteps, typeList.length)
-      var chosen = 0L
-      val out = scala.collection.mutable.ArrayBuffer[(Int, String, Long)]()
-      for (k <- 1 to steps) {
-        val cands = typeList.zipWithIndex
-          .filter { case (_, i) => (chosen & (1L << i)) == 0 }
-        val aggs = cands.map { case (_, i) =>
-          sum(when(col("mask").bitwiseAND(lit(chosen | (1L << i))) =!= 0,
-            col("n")).otherwise(0L)).as(s"c$i")
+      val picks =
+        if (rows.length <= capRows) {
+          val masks = rows.map(_.getLong(0))
+          val ns = rows.map(_.getLong(1))
+          greedyPicks(typeList, steps) { (chosen, cands) =>
+            cands.map { i =>
+              val pick = chosen | (1L << i)
+              var cov = 0L
+              for (r <- masks.indices) if ((masks(r) & pick) != 0) cov += ns(r)
+              cov
+            }
+          }
+        } else {
+          val cached = Dedup.materializedSketch(hist)
+          greedyPicks(typeList, steps) { (chosen, cands) =>
+            val aggs = cands.map { i =>
+              sum(when(col("mask").bitwiseAND(lit(chosen | (1L << i))) =!= 0,
+                col("n")).otherwise(0L)).as(s"c$i")
+            }
+            val row = cached.agg(aggs.head, aggs.tail: _*).head()
+            cands.indices.map(j => if (row.isNullAt(j)) 0L else row.getLong(j))
+          }
         }
-        val row = hist.agg(aggs.head, aggs.tail.toSeq: _*).head()
-        val covs = cands.zipWithIndex.map { case ((t, i), j) =>
-          (t, i, if (row.isNullAt(j)) 0L else row.getLong(j))
-        }
-        val best = covs.minBy { case (t, _, cov) => (-cov, t) }
-        chosen |= (1L << best._2)
-        out += ((k, best._1, best._3))
-      }
-      out.toSeq.toDF("step", "chosen_type", "covered")
+      picks.toDF("step", "chosen_type", "covered")
+    }
+  }
+
+  /** The greedy shared by both q195 paths: `covers(chosen, cands)`
+    * gives each candidate bit's reach with `chosen` already picked,
+    * and each step takes the largest, ties to the smaller type name. */
+  private def greedyPicks(typeList: Array[String], steps: Int)(
+      covers: (Long, Seq[Int]) => Seq[Long]): Seq[(Int, String, Long)] = {
+    var chosen = 0L
+    (1 to steps).map { k =>
+      val cands = typeList.indices.filter(i => (chosen & (1L << i)) == 0)
+      val (i, cov) = cands.zip(covers(chosen, cands))
+        .minBy { case (i, cov) => (-cov, typeList(i)) }
+      chosen |= 1L << i
+      (k, typeList(i), cov)
     }
   }
 

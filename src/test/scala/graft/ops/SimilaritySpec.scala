@@ -405,29 +405,39 @@ class SimilaritySpec extends SparkTestBase {
   }
 
   test("semantic keepers collapse planted clusters to their min id") {
-    import org.apache.spark.sql.functions._
     import spark.implicits._
+    // The testdata's cosine >= 0.9 graph is empty, so q71b's keeper
+    // closure is pruned there; here q71b runs on planted clusters whose
+    // min id is not their first member, on both sides of the fused
+    // edge cap (the driver union-find and the dupKeepers loop)
     val dim = 8
     def mk(active: Int, eps: Double, at: Int): Array[Float] = {
       val v = Array.fill(dim)(0.0f); v(active) = 1.0f; v(at) = eps.toFloat; v
     }
-    val clones = for (c <- 0 until 3; i <- 0 until 5)
-      yield ((c * 5 + i).toLong, mk(c, 0.01 * (i + 1), (c + 3) % dim))
-    val noise = for (i <- 0 until 30) yield {
-      val rnd = new scala.util.Random(7000 + i)
+    val clusters = Seq(Seq(14L, 3L, 22L, 9L, 30L), Seq(41L, 8L, 17L, 50L, 26L),
+      Seq(35L, 33L, 12L, 47L, 5L))
+    val clones = for ((ids, c) <- clusters.zipWithIndex; (id, i) <- ids.zipWithIndex)
+      yield (id, mk(c, 0.01 * (i + 1), (c + 3) % dim))
+    val dupVec = mk(6, 0.5, 7)
+    val exactDups = Seq(71L, 65L, 68L).map(_ -> dupVec)
+    val noise = for (i <- 0 until 40) yield {
+      val rnd = new scala.util.Random(9000 + i)
       (200L + i, Array.fill(dim)(rnd.nextFloat() - 0.5f))
     }
-    val emb = (clones ++ noise).toDF("vec_id", "embedding")
-    val pairs = Similarity.semanticCellPairs(emb).filter(col("cosine") >= 0.9)
-      .select(col("vec_a").as("doc_a"), col("vec_b").as("doc_b"))
-    val keepers = Dedup.dupKeepers(emb.select(col("vec_id").as("doc_id")), pairs)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    Dedup.releaseSketchCaches()
-    // each clone cluster collapses to its min id; noise keeps itself
-    for (c <- 0 until 3; i <- 0 until 5)
-      assert(keepers((c * 5 + i).toLong) == c * 5L, s"cluster $c member $i")
-    for (i <- 0 until 30)
-      assert(keepers(200L + i) == 200L + i, s"noise $i lost itself")
+    val dir = tmpDir("q71b-planted")
+    (clones ++ exactDups ++ noise).toDF("vec_id", "embedding")
+      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    val want = (clusters :+ Seq(71L, 65L, 68L)).flatMap(ids => ids.map(_ -> ids.min)).toMap ++
+      noise.map { case (id, _) => id -> id }
+    val capKey = "spark.graft.cc.fusedMaxEdges"
+    for (cap <- Seq(None, Some("0"))) {
+      cap.foreach(spark.conf.set(capKey, _))
+      val got = try {
+        Similarity.semanticKeepers(spark, dir).collect()
+          .map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("keeper")).toMap
+      } finally { spark.conf.unset(capKey); Dedup.releaseSketchCaches() }
+      assert(got == want, s"cap ${cap.getOrElse("default")}: got $got want $want")
+    }
   }
 
   test("semantic dedup on the corpus: bounded cell-local work, valid report shape") {

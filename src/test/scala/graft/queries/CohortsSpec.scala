@@ -34,16 +34,16 @@ class CohortsSpec extends SparkTestBase {
       .count() > 0)
   }
 
-  test("q195 greedy cover equals a driver replay and meets the (1-1/e) bound") {
-    val pairs = graft.Tables.events(spark, sf)
+  /** Independent greedy replay on raw per-type user sets, with the
+    * same (cov DESC, name ASC) tie-break. */
+  private def greedyReplay(d: String): Seq[(Int, String, Long)] = {
+    val pairs = graft.Tables.events(spark, d)
       .select(col("user_id"), col("event_type")).distinct()
       .collect().map(r => (r.getLong(0), r.getString(1)))
     val byType = pairs.groupBy(_._2).view.mapValues(_.map(_._1).toSet).toMap
-    // independent greedy replay on raw sets, same (cov DESC, name ASC)
-    // tie-break
     var covered = Set.empty[Long]
     var chosen = Set.empty[String]
-    val want = (1 to graft.queries.Cohorts.greedyCoverSteps).map { k =>
+    (1 to graft.queries.Cohorts.greedyCoverSteps).map { k =>
       val best = byType.keys.filterNot(chosen)
         .map(t => (t, (covered ++ byType(t)).size))
         .minBy { case (t, c) => (-c, t) }
@@ -51,9 +51,27 @@ class CohortsSpec extends SparkTestBase {
       covered ++= byType(best._1)
       (k, best._1, best._2.toLong)
     }
+  }
+
+  /** q195 with its histogram cap at 0 bytes (the distributed per-step
+    * loop) and at the default (one collect, the driver greedy). */
+  private def greedyBothPaths(d: String): Seq[Seq[(Int, String, Long)]] =
+    Seq(0L, graft.queries.Cohorts.greedyDriverBytes).map { cap =>
+      val rows = graft.queries.Cohorts.greedyCoverOf(spark, d, cap)
+        .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
+      graft.ops.Dedup.releaseSketchCaches()
+      rows
+    }
+
+  test("q195 greedy cover equals a driver replay and meets the (1-1/e) bound") {
+    // on both sides of the histogram cap, and through the registry
+    val want = greedyReplay(sf)
+    greedyBothPaths(sf).foreach { got =>
+      assert(got == want, s"greedy replay diverged: got $got want $want")
+    }
     val got = graft.queries.Cohorts.queries("q195_greedy_cover")(spark, sf)
       .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))).toSeq
-    assert(got == want, s"greedy replay diverged: got $got want $want")
+    assert(got == want, s"registered q195 diverged: got $got want $want")
     // the classic max-coverage guarantee, per prefix size, against the
     // exact q185 frontier
     val frontier = graft.queries.Cohorts.queries("q185_coverage_frontier")(
@@ -64,6 +82,41 @@ class CohortsSpec extends SparkTestBase {
       val opt = frontier(k)
       assert(cov.toDouble >= (1.0 - 1.0 / math.E) * opt,
         s"greedy step $k covered $cov < (1-1/e) x optimal $opt")
+    }
+  }
+
+  test("q195 runs past q185's 20-type guard on both paths and refuses past 64 types") {
+    import spark.implicits._
+    val dir = tmpDir("q195-wide")
+    val base = java.sql.Timestamp.valueOf("2024-01-01 00:00:00")
+    // 26 types whose reach falls as their names rise, plus a twin of
+    // the widest (same users, smaller name) so the name tie-break
+    // decides step 1: 27 types, past q185's guard
+    val types = (0 until 26).map(i => s"${('z' - i).toChar}_type")
+    val rnd = new scala.util.Random(195)
+    val rows = for {
+      u <- 1L to 400L
+      (t, i) <- types.zipWithIndex
+      if rnd.nextDouble() < 0.6 / (1 + i)
+    } yield (u * 100 + i, base, u, t, 1.0, "{}")
+    val twins = rows.filter(_._4 == types(0)).map(r => r.copy(_4 = "aa_twin"))
+    (rows ++ twins).toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$dir/events.parquet")
+    intercept[IllegalArgumentException] {
+      graft.queries.Cohorts.queries("q185_coverage_frontier")(spark, dir).collect()
+    }
+    val want = greedyReplay(dir)
+    assert(want.head._2 == "aa_twin", s"the tie must decide step 1: $want")
+    greedyBothPaths(dir).foreach { got =>
+      assert(got == want, s"greedy replay diverged: got $got want $want")
+    }
+    // past 64 types a long mask would wrap two types onto one bit
+    val wide = tmpDir("q195-65")
+    (1 to 65).map(i => (i.toLong, base, i.toLong, f"t$i%02d", 1.0, "{}"))
+      .toDF("event_id", "ts", "user_id", "event_type", "value", "props")
+      .write.mode("overwrite").parquet(s"$wide/events.parquet")
+    intercept[IllegalArgumentException] {
+      graft.queries.Cohorts.queries("q195_greedy_cover")(spark, wide).collect()
     }
   }
 

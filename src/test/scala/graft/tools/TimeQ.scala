@@ -8,7 +8,11 @@ import graft.SparkEntry
   * pre-pass at sf0.001) so single-query numbers line up with
   * the committed sweep, and optionally dumps `explain("formatted")`
   * for each to `$SPARK_GRAFT_PLANS_DIR/<q>_<tag>.txt` (default
-  * plans/r16).
+  * plans/r16). Each run also counts its Janino compiles (the
+  * `CodegenMetrics.METRIC_COMPILATION_TIME` count before and after),
+  * printed next to the wall times: a query that mints new generated
+  * classes on every call shows up there, not in its own wall time
+  * alone (it evicts the other queries' classes from the cache).
   *
   * Run: sbt "Test/runMain graft.tools.TimeQ [--plans tag] <q...>"
   * Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
@@ -40,8 +44,11 @@ object TimeQ {
           System.err.println(s"[timeq] prepass $n failed: ${e.getMessage}") }
         graft.ops.Dedup.releaseSketchCaches()
       }
-    def once(n: String): Double = {
+    val compiles = org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME
+    /** (wall seconds, Janino compiles) of one run of `n`. */
+    def once(n: String): (Double, Long) = {
       spark.sparkContext.setJobDescription(n)
+      val c0 = compiles.getCount
       val t0 = System.nanoTime()
       val el =
         try {
@@ -51,13 +58,14 @@ object TimeQ {
         } catch { case e: Throwable =>
           System.err.println(s"[timeq] $n failed: ${e.getMessage}"); -1.0 }
       graft.ops.Dedup.releaseSketchCaches()
-      el
+      (el, compiles.getCount - c0)
     }
     names.foreach { n =>
-      val cold = once(n)
-      val runs = Array.fill(3)(once(n))
-      java.util.Arrays.sort(runs)
-      println(f"[timeq] $n%-34s cold=$cold%8.3f warm=${runs(1)}%8.3f min=${runs(0)}%8.3f max=${runs(2)}%8.3f")
+      val (cold, coldCompiles) = once(n)
+      val warm = Seq.fill(3)(once(n))
+      val runs = warm.map(_._1).sorted
+      println(f"[timeq] $n%-34s cold=$cold%8.3f warm=${runs(1)}%8.3f min=${runs(0)}%8.3f max=${runs(2)}%8.3f" +
+        s" compiles cold=$coldCompiles warm=${warm.map(_._2).mkString("/")}")
       planTag.foreach { tag =>
         val dir = java.nio.file.Paths.get(
           sys.env.getOrElse("SPARK_GRAFT_PLANS_DIR", "plans/r16"))
